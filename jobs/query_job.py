@@ -8,7 +8,8 @@
         --segments <ingest work dir> --queries "prince andrew" [-k 100]
 
 Prints one JSON line per query: {"query": ..., "topk": [[docid, score], ...]}.
-Uses the driver-side Block-Max WAND (exact) — for bulk query sets the
+Uses the driver-side exact top-k (``topk_wand``: one pruned block fetch,
+vectorized BM25 scoring) — for bulk query sets the
 distributed plan (operators/query.topk_distributed) amortizes better.
 """
 

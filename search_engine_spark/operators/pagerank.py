@@ -358,9 +358,15 @@ def hits(
     e_by_dst = e.repartition("dst").localCheckpoint()
 
     def _l1_scaled(df: DataFrame, col: str) -> DataFrame:
+        # an edgeless round sums to 0: every score is 0.0 (a bare 0/0 is
+        # NULL, or DIVIDE_BY_ZERO under ANSI mode)
         total = df.agg(F.sum(col).alias("_t"))
         return df.crossJoin(F.broadcast(total)).select(
-            "id", (F.col(col) * F.lit(float(n_nodes)) / F.col("_t")).alias(col)
+            "id",
+            F.when(
+                F.col("_t") != 0,
+                F.col(col) * F.lit(float(n_nodes)) / F.col("_t"),
+            ).otherwise(F.lit(0.0)).alias(col),
         )
 
     hub = nodes.withColumn("hub", F.lit(1.0))
@@ -399,7 +405,8 @@ def hits_sql(
 ) -> str:
     """Full DuckDB mirror of :func:`hits` over :func:`synthetic_edges_sql`'s
     edge relation — ``iters`` unrolled (auth-raw, auth-norm, hub-raw,
-    hub-norm) CTE quadruples, final 6-dp round."""
+    hub-norm) CTE quadruples, final 6-dp round. A zero L1 sum (no edges)
+    normalizes to 0.0 scores, as in :func:`hits`."""
     ctes = [
         f"n AS MATERIALIZED (SELECT count(*) AS n FROM {table})",
         f"edges AS MATERIALIZED ({synthetic_edges_sql(table, docid)})",
@@ -415,8 +422,10 @@ def hits_sql(
   ON s.dst = d.{docid}::BIGINT)"""
         )
         ctes.append(
-            f"a{i} AS MATERIALIZED (SELECT id, auth * (SELECT n FROM n) / "
-            f"(SELECT sum(auth) FROM a{i}r) AS auth FROM a{i}r)"
+            f"a{i} AS MATERIALIZED (SELECT id, "
+            f"coalesce(auth * (SELECT n FROM n) / "
+            f"nullif((SELECT sum(auth) FROM a{i}r), 0), 0.0) AS auth "
+            f"FROM a{i}r)"
         )
         ctes.append(
             f"""h{i}r AS MATERIALIZED (
@@ -427,8 +436,10 @@ def hits_sql(
   ON s.src = d.{docid}::BIGINT)"""
         )
         ctes.append(
-            f"h{i} AS MATERIALIZED (SELECT id, hub * (SELECT n FROM n) / "
-            f"(SELECT sum(hub) FROM h{i}r) AS hub FROM h{i}r)"
+            f"h{i} AS MATERIALIZED (SELECT id, "
+            f"coalesce(hub * (SELECT n FROM n) / "
+            f"nullif((SELECT sum(hub) FROM h{i}r), 0), 0.0) AS hub "
+            f"FROM h{i}r)"
         )
     return (
         "WITH " + ",\n".join(ctes)

@@ -1,21 +1,20 @@
 """Query-side engine: BM25 top-k over the block index.
 
-Two execution paths, both exact (no posting-list sampling — the reference
-randomly sampled 2000 docs per term, frontend/Master.java:356-391; the
-north star replaces that with exact block-max pruning):
+One exact scorer per execution site (no posting-list sampling — the
+reference randomly sampled 2000 docs per term, frontend/Master.java:356-391;
+the north star replaces that with exact BM25):
 
 * ``topk_distributed`` — a declarative Spark plan: partition-pruned scan of
   the postings table for the query's terms, block decode inside
   ``mapInPandas`` (Arrow-batched), per-(doc,term) BM25 partials, then
   ``groupBy(docid).sum → ORDER BY score DESC LIMIT k``
-  (TakeOrderedAndProject). Scales with the cluster; used for batch query
-  workloads (thousands of queries per job).
+  (TakeOrderedAndProject). Scales with the cluster; ``topk_batch`` is its
+  many-queries-per-job form.
 
-* ``topk_wand`` — driver-side document-at-a-time Block-Max WAND (Ding &
-  Suel, SIGIR 2011) over the fetched posting blocks for interactive
-  queries: exact top-k with block skipping, never decoding blocks whose
-  block-max cannot beat the current threshold. Verified rank-identical to
-  the exhaustive oracle in tests.
+* ``topk_wand`` — driver-side, for interactive queries: one partition-
+  pruned collect of the query terms' posting blocks, then vectorized
+  (numpy, array-at-a-time) exact BM25 scoring. Queries whose posting
+  lists are too large for the driver hand off to ``topk_distributed``.
 
 Phrase search (reference jobs/IndexerProjectPhraseSearch.java:328-475)
 intersects posting lists in df-ascending order and verifies adjacency with
@@ -24,7 +23,6 @@ the stored positions via a two-pointer offset merge.
 
 from __future__ import annotations
 
-import heapq
 import json
 import os
 from collections.abc import Iterator
@@ -36,24 +34,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from search_engine_spark.catalog import Warehouse
 from search_engine_spark.functions.codec import decode_block_np
-from search_engine_spark.oracle.bm25 import B, K1, bm25_term_score
+from search_engine_spark.oracle.bm25 import B, K1
 from search_engine_spark.oracle.text import STOPWORDS, tokenize
 
 # Final scores round to this many decimals before the (score desc,
 # docid asc) ordering. BM25 doubles reproduce only to ~1 ulp across
-# physical plans (partition sum order, stored vs recomputed avgdl, seed/
-# remainder score splits), and two docs with DIFFERENT (tf, dl) inputs can
-# land on the same double — a 1-ulp drift then breaks that coincidental tie
-# in one plan but not another and flips the emitted ranking. 9 dp is far
+# physical plans (partition sum order, stored vs recomputed avgdl), and
+# two docs with DIFFERENT (tf, dl) inputs can land on the same double — a
+# 1-ulp drift then breaks that coincidental tie in one plan but not
+# another and flips the emitted ranking. 9 dp is far
 # below any meaningful score difference yet ~10^7 ulps wide, so the
 # tie-break — and therefore the ranking — is identical for every plan and
-# parallelism level. WAND's top-k heap holds ROUNDED scores too (so its
-# k-boundary tie semantics match the declarative paths), which makes its
-# pruning thresholds rounded: every prune test is slackened by
-# SCORE_SLACK so a doc whose rounded score could still tie the rounded
-# theta is never skipped — pruning stays exact under the contract.
+# parallelism level.
 SCORE_ROUND = 9
-SCORE_SLACK = 10.0 ** -SCORE_ROUND
 
 
 @dataclass
@@ -257,8 +250,7 @@ def _decode_rows_idf_term(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """(term, block, idf) batches → (term, docid, tf, dl, idf) rows —
-    the term column rides along so downstream can track which terms
-    contributed to a doc's partial score."""
+    the term column rides along for per-term aggregation downstream."""
     for pdf in batches:
         t_out, d_l, t_l, l_l, i_l = [], [], [], [], []
         for term, blob, idf in zip(pdf["term"], pdf["block"], pdf["idf"]):
@@ -277,274 +269,6 @@ def _decode_rows_idf_term(
              "dl": np.concatenate(l_l),
              "idf": np.concatenate(i_l)}
         )
-
-
-BLOCK_KEY = ["term", "bucket", "block_id"]
-
-# Above this many metadata rows the pruned-plan's planning decisions stay
-# distributed; below it they collect to the driver (fewer fixed jobs).
-META_COLLECT_MAX = 20_000
-
-
-def topk_distributed_pruned(
-    index: Index,
-    query: str,
-    k: int = 100,
-    seed_blocks_per_term: int = 2,
-    max_candidates: int = 200_000,
-    min_blocks: int = 256,
-    decimals: int = SCORE_ROUND,
-) -> DataFrame:
-    """(docid, score) — EXACT top-k with Block-Max pruning as a
-    distributed plan: the Ding & Suel block-max idea (driver path:
-    ``topk_wand``) restructured into three bulk phases so block skipping
-    works without document-at-a-time coordination. Replaces the
-    reference's posting-list sampling (frontend/Master.java:356-391,
-    ≤2000 random docs per term) with exact pruning.
-
-    1. **Seed θ**: decode only the ``seed_blocks_per_term`` highest-
-       upper-bound blocks per term; the k-th best PARTIAL score is a
-       valid lower bound θ on the true k-th best score.
-    2. **Prune + partial score**: a block of term t survives iff
-       ``ub(b) + Σ_{t'≠t} max_ub(t') ≥ θ``. Every doc whose blocks are
-       all pruned is provably below θ (each posting's contribution is ≤
-       its block's ub). Decode ONLY survivors — block bytes of pruned
-       blocks are never read (two scans of the postings table: a
-       metadata projection without the bytes column, then a bytes scan
-       semi-joined to surviving keys). Docs keep the set of terms that
-       contributed, so the remaining headroom is
-       ``slack(d) = Σ_{t ∉ present(d)} max_pruned_ub(t)``.
-    3. **Exact rescore**: candidates = docs with
-       ``partial + slack ≥ θ``. Their missing contributions live only in
-       pruned blocks whose [first_docid, last_docid] range contains a
-       candidate; decode exactly those, filter decoded rows to the
-       candidate set, add in, take the global top-k.
-
-    Rank- and score-identical to ``topk_distributed`` (tested). Adaptive
-    bailouts to the plain plan keep it never-worse in the regimes where
-    pruning cannot pay: fewer than ``min_blocks`` total blocks for the
-    query's terms (each extra phase is a full Spark job + Python-worker
-    roundtrip — with a handful of blocks the single-job full decode is
-    already cheaper than one phase), or a candidate set larger than
-    ``max_candidates`` (θ barely prunes → the full plan is the right
-    plan). θ is slackened by 1e-9 so float drift between the stored
-    block_max and recomputed per-row parts can only under-prune, never
-    over-prune."""
-    terms = parse_query(query, stem=index.stats.get("stem", True))
-    spark = index.spark
-    if not terms:
-        return spark.createDataFrame([], "docid long, score double")
-    avgdl = index.stats["avgdl"]
-    tstats = index.terms.filter(F.col("term").isin(terms)).select(
-        "term", "idf"
-    )
-
-    # --- metadata projection: NO block bytes read in this scan
-    meta = (
-        index.postings.filter(F.col("term").isin(terms))
-        .select(*BLOCK_KEY, "first_docid", "last_docid", "n", "block_max")
-        .join(F.broadcast(tstats), "term")
-        .withColumn("ub", F.col("idf") * F.col("block_max"))
-    )
-    # small-metadata fast path: when the query's block metadata fits on
-    # the driver, collect it ONCE and make every planning decision
-    # (per-term maxima, seed selection, pruned maxima) locally — this
-    # removes two aggregate jobs and a window from the fixed latency,
-    # which dominates on small/medium indexes. Large metadata (stop-word
-    # terms over a huge corpus) keeps the fully distributed planning.
-    meta_rows = meta.limit(META_COLLECT_MAX + 1).collect()
-    meta_local = meta_rows if len(meta_rows) <= META_COLLECT_MAX else None
-    if len(meta_rows) < min_blocks:
-        return topk_distributed(index, query, k, decimals=decimals)
-    if meta_local is not None:
-        per_term = {}
-        for r in meta_local:
-            per_term[r["term"]] = max(
-                per_term.get(r["term"], 0.0), float(r["ub"])
-            )
-    else:
-        per_term = {
-            r["term"]: float(r["mx"])
-            for r in meta.groupBy("term").agg(F.max("ub").alias("mx")).collect()
-        }
-    if not per_term:
-        return spark.createDataFrame([], "docid long, score double")
-    sum_all = sum(per_term.values())
-
-    def _bytes_for(keys_df: DataFrame) -> DataFrame:
-        """Bytes scan restricted (term-pushdown + key join) to keys_df."""
-        return (
-            index.postings.filter(F.col("term").isin(terms))
-            .select(*BLOCK_KEY, "block")
-            .join(F.broadcast(keys_df), BLOCK_KEY)
-        )
-
-    # --- phase 1: seed θ from the top blocks per term
-    if meta_local is not None:
-        by_term: dict[str, list] = {}
-        for r in meta_local:
-            by_term.setdefault(r["term"], []).append(r)
-        seed_local = []
-        for t, rows in by_term.items():
-            rows.sort(key=lambda r: (-r["ub"], r["bucket"], r["block_id"]))
-            seed_local.extend(rows[:seed_blocks_per_term])
-        seed_keys = spark.createDataFrame(
-            [(r["term"], r["bucket"], r["block_id"]) for r in seed_local],
-            "term string, bucket int, block_id int",
-        )
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("term").orderBy(
-            F.col("ub").desc(), F.col("bucket").asc(), F.col("block_id").asc()
-        )
-        seed_keys = (
-            meta.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= seed_blocks_per_term)
-            .select(*BLOCK_KEY)
-        )
-    seed_rows = (
-        _bytes_for(seed_keys.select(*BLOCK_KEY))
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-    )
-    seed_top = (
-        seed_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.sum("part").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .collect()
-    )
-    if len(seed_top) < k:
-        # seed couldn't even fill k — tiny index; pruning pointless
-        return topk_distributed(index, query, k, decimals=decimals)
-    # θ slack = one ulp at the EMITTED precision: a doc pruned by θ must
-    # not be able to round into a tie with the kth kept score (the 1e-9
-    # default generalizes to any ``decimals``)
-    theta = float(seed_top[-1]["score"]) - max(1e-9, 10.0 ** -decimals)
-
-    # --- phase 2: prune blocks, partial-score survivors with term sets
-    rest = {t: sum_all - mx for t, mx in per_term.items()}
-    pruned_schema = (
-        "term string, bucket int, block_id int, "
-        "first_docid long, last_docid long"
-    )
-    if meta_local is not None:
-        surv_local = [
-            r for r in meta_local if r["ub"] + rest[r["term"]] >= theta
-        ]
-        pruned_local = [
-            r for r in meta_local if r["ub"] + rest[r["term"]] < theta
-        ]
-        surviving = spark.createDataFrame(
-            [(r["term"], r["bucket"], r["block_id"]) for r in surv_local],
-            "term string, bucket int, block_id int",
-        )
-        pruned = spark.createDataFrame(
-            [
-                (r["term"], r["bucket"], r["block_id"],
-                 r["first_docid"], r["last_docid"])
-                for r in pruned_local
-            ],
-            pruned_schema,
-        )
-        pruned_max = {}
-        for r in pruned_local:
-            pruned_max[r["term"]] = max(
-                pruned_max.get(r["term"], 0.0), float(r["ub"])
-            )
-    else:
-        rest_expr = F.lit(None).cast("double")
-        for t, r in rest.items():
-            rest_expr = F.when(F.col("term") == t, F.lit(r)).otherwise(
-                rest_expr
-            )
-        meta = meta.withColumn("rest", rest_expr)
-        surviving = meta.filter(F.col("ub") + F.col("rest") >= theta)
-        pruned = meta.filter(F.col("ub") + F.col("rest") < theta)
-        pruned_max = {
-            r["term"]: float(r["mx"])
-            for r in pruned.groupBy("term")
-            .agg(F.max("ub").alias("mx"))
-            .collect()
-        }
-    surv_rows = (
-        _bytes_for(surviving.select(*BLOCK_KEY))
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-    )
-    partial = (
-        surv_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(
-            F.sum("part").alias("pscore"),
-            F.collect_set("term").alias("present"),
-        )
-    )
-    if pruned_max:
-        slack = F.lit(0.0)
-        for t, mx in pruned_max.items():
-            slack = slack + F.when(
-                F.array_contains(F.col("present"), t), F.lit(0.0)
-            ).otherwise(F.lit(mx))
-    else:
-        slack = F.lit(0.0)
-    cands = (
-        partial.withColumn("slack", slack)
-        .filter(F.col("pscore") + F.col("slack") >= theta)
-        .localCheckpoint()  # referenced by phase-3 join AND final union
-    )
-    n_cands = cands.count()
-    if n_cands > max_candidates:
-        return topk_distributed(index, query, k, decimals=decimals)
-
-    # --- phase 3: exact rescore of candidates from intersecting pruned
-    # blocks only (docid-range containment against the candidate set)
-    cand_ids = cands.select("docid")
-    needed = (
-        pruned.join(
-            F.broadcast(cand_ids),
-            (F.col("docid") >= F.col("first_docid"))
-            & (F.col("docid") <= F.col("last_docid")),
-            "left_semi",
-        )
-        .select(*BLOCK_KEY)
-    )
-    pruned_rows = (
-        _bytes_for(needed)
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-        .join(F.broadcast(cand_ids), "docid", "left_semi")
-    )
-    extra = (
-        pruned_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.sum("part").alias("xscore"))
-    )
-    exact = (
-        cands.join(extra, "docid", "left")
-        .select(
-            "docid",
-            F.round(
-                F.col("pscore") + F.coalesce(F.col("xscore"), F.lit(0.0)),
-                decimals,
-            ).alias("score"),
-        )
-    )
-    return exact.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
 def topk_over_segments(
@@ -672,20 +396,10 @@ def topk_batch(
     )
     from pyspark.sql import Window
 
-    from search_engine_spark.oracle.bm25 import B, K1
-
     scored = (
         decoded.join(F.broadcast(tstats), "term")
         .join(F.broadcast(qmap), "term")
-        .withColumn(
-            "part",
-            F.col("idf") * F.col("tf") * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            ),
-        )
+        .withColumn("part", _bm25_part_col(avgdl))
         .groupBy("qid", "docid")
         # rank on the same emission-rounded value (decimals defaults to
         # the library-wide SCORE_ROUND so batch and single-query paths
@@ -704,144 +418,38 @@ def topk_batch(
 
 
 # ---------------------------------------------------------------------------
-# Driver-side Block-Max WAND
+# Driver-side exact top-k
 # ---------------------------------------------------------------------------
 
-class _Cursor:
-    """Posting cursor over the (bucket, block_id)-ordered blocks of a term.
-
-    Blocks decode lazily; ``shallow_advance`` moves across block metadata
-    without decoding (the block-max skip)."""
-
-    __slots__ = (
-        "term", "idf", "blocks", "bi", "docids", "tfs", "dls", "pi", "ub",
-    )
-
-    def __init__(self, term: str, idf: float, blocks: list[tuple]):
-        # blocks: list of (first_docid, last_docid, block_max_norm, blob)
-        # where block_max_norm excludes the per-term idf factor (stored
-        # idf-free by the indexer); all bounds here multiply idf back in.
-        self.term = term
-        self.idf = idf
-        self.blocks = blocks
-        self.bi = 0
-        self.docids: list[int] = []
-        self.tfs: list[int] = []
-        self.dls: list[int] = []
-        self.pi = 0
-        # global upper bound = idf · max block_max (standard WAND term UB)
-        self.ub = idf * max(b[2] for b in blocks) if blocks else 0.0
-        self._load()
-
-    _EMPTY = np.empty(0, dtype=np.int64)
-
-    def _load(self) -> None:
-        if self.bi < len(self.blocks):
-            d, t, dl = decode_block_np(self.blocks[self.bi][3])
-            self.docids, self.tfs, self.dls = d, t, dl
-            self.pi = 0
-        else:
-            self.docids = self.tfs = self.dls = self._EMPTY
-            self.pi = 0
-
-    @property
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    @property
-    def doc(self) -> int:
-        return int(self.docids[self.pi])
-
-    @property
-    def tf(self) -> int:
-        return int(self.tfs[self.pi])
-
-    @property
-    def dl(self) -> int:
-        return int(self.dls[self.pi])
-
-    @property
-    def block_max(self) -> float:
-        return self.idf * self.blocks[self.bi][2]
-
-    @property
-    def block_last(self) -> int:
-        return self.blocks[self.bi][1]
-
-    def next_geq(self, target: int) -> None:
-        """Advance to the first posting with docid >= target. Skipped
-        blocks are passed over on METADATA alone — only the landing block
-        decodes (the whole point of block-max skipping; decoding each
-        intermediate block made a long skip cost O(skipped) decodes)."""
-        moved = False
-        while not self.exhausted and self.blocks[self.bi][1] < target:
-            self.bi += 1
-            moved = True
-        if self.exhausted:
-            self.docids = self.tfs = self.dls = self._EMPTY
-            return
-        if moved or not len(self.docids):
-            self._load()
-        # binary search within the decoded block (never moves backwards:
-        # postings before pi are already consumed)
-        self.pi = max(
-            self.pi, int(np.searchsorted(self.docids, target, side="left"))
-        )
-        if self.pi >= len(self.docids):
-            # current block fully consumed; move on without decoding — the
-            # recursion's metadata loop picks the landing block
-            self.bi += 1
-            self.docids = self.tfs = self.dls = self._EMPTY
-            if self.exhausted:
-                return
-            self.next_geq(target)
-
-    def advance(self) -> None:
-        self.pi += 1
-        if self.pi >= len(self.docids):
-            self.bi += 1
-            self._load()
-
-
-def _fetch_term_blocks(index: Index, terms: list[str]) -> dict[str, list[tuple]]:
-    """Collect (bucket, block_id)-ordered block metadata + bytes per term.
+def _fetch_term_blocks(index: Index, terms: list[str]) -> dict[str, list[bytes]]:
+    """Collect the (bucket, block_id)-ordered block bytes per term.
     One partition-pruned scan for all query terms."""
     rows = (
         index.postings.filter(F.col("term").isin(terms))
-        .select(
-            "term", "bucket", "block_id", "first_docid", "last_docid",
-            "block_max", "block", "n",
-        )
+        .select("term", "bucket", "block_id", "block")
         .collect()
     )
     out: dict[str, list[tuple]] = {}
     for r in rows:
         out.setdefault(r["term"], []).append(
-            (r["bucket"], r["block_id"], r["first_docid"], r["last_docid"],
-             r["block_max"], bytes(r["block"]), r["n"])
+            (r["bucket"], r["block_id"], bytes(r["block"]))
         )
-    for t in out:
-        out[t].sort(key=lambda x: (x[0], x[1]))
-        out[t] = [(f, l, m, b, n) for (_bk, _bi, f, l, m, b, n) in out[t]]
-    return out
+    return {t: [b for _bk, _bi, b in sorted(blks)] for t, blks in out.items()}
 
 
 def _topk_bulk(
-    blocks: dict[str, list[tuple]],
+    blocks: dict[str, list[bytes]],
     idfs: dict[str, float],
     avgdl: float,
     k: int,
 ) -> list[tuple[int, float]]:
     """Vectorized exhaustive scoring of the fetched blocks (numpy): decode
     every block, compute BM25 partials array-at-a-time, sum per docid via
-    sorted reduceat, partial-select top-k. Exact — same result as WAND —
-    and ~100× faster than the Python DAAT loop when pruning cannot help."""
-    from search_engine_spark.oracle.bm25 import B, K1
-
+    sorted reduceat, partial-select top-k. Exact."""
     d_l, p_l = [], []
     for t, blks in blocks.items():
         idf = idfs[t]
-        for _f, _l, _m, blob, _n in blks:
+        for blob in blks:
             d, tf, dl = decode_block_np(blob)
             if not len(d):
                 continue
@@ -865,11 +473,6 @@ def _topk_bulk(
     return [(int(uniq[i]), float(sums[i])) for i in top]
 
 
-# When the query's posting lists cover more than this fraction of the
-# corpus (per term on average), block-max pruning cannot skip anything
-# useful and the vectorized exhaustive path wins by orders of magnitude.
-BULK_SCORE_DF_FRACTION = 0.10
-
 # Driver-side serving paths (``topk_wand``, ``phrase_docs``) collect
 # posting-block BYTES to the driver. Above this many postings for one
 # query they hand off to their distributed siblings instead — a stop-word
@@ -884,19 +487,14 @@ def topk_wand(
     index: Index,
     query: str,
     k: int = 100,
-    strategy: str = "auto",
     driver_postings_max: int | None = None,
 ) -> list[tuple[int, float]]:
-    """Exact BM25 top-k, driver-side (the interactive path).
-
-    ``strategy="auto"`` picks between two EXACT executions over the same
-    partition-pruned block fetch: document-at-a-time Block-Max WAND
-    (Ding & Suel 2011) when the query terms are selective enough for
-    block skipping to pay, and vectorized exhaustive scoring
-    (``_topk_bulk``) when the posting lists cover most of the corpus —
-    there a Python posting-at-a-time loop is pure overhead because no
-    block can be skipped. Both return [(docid, score)] sorted
-    (score desc, docid asc), identical to the exhaustive oracle.
+    """Exact BM25 top-k, driver-side (the interactive path): one
+    partition-pruned collect of the query terms' posting blocks, then
+    vectorized exhaustive scoring (``_topk_bulk``). Returns
+    [(docid, score)] sorted (score desc, docid asc), identical to the
+    exhaustive oracle. The name predates this scorer and is kept for its
+    callers.
 
     Document lengths come from the posting blocks themselves (codec v3),
     so the query path touches ONLY the pruned postings + terms for the
@@ -906,15 +504,14 @@ def topk_wand(
     Driver-memory guard: the terms lookup below also reads ``df``, and
     when the query's total posting count exceeds ``driver_postings_max``
     (default :data:`DRIVER_POSTINGS_MAX`) the block bytes are NEVER
-    collected — the call hands off to ``topk_distributed_pruned`` and
-    returns its (rank- and score-identical) result. The preflight costs
-    zero extra Spark jobs."""
+    collected — the call hands off to ``topk_distributed`` and returns
+    its (rank- and score-identical) result. The preflight costs zero
+    extra Spark jobs."""
     if driver_postings_max is None:
         driver_postings_max = DRIVER_POSTINGS_MAX
     terms = parse_query(query, stem=index.stats.get("stem", True))
     if not terms:
         return []
-    avgdl = index.stats["avgdl"]
     trows = (
         index.terms.filter(F.col("term").isin(terms))
         .select("term", "idf", "df")
@@ -922,130 +519,11 @@ def topk_wand(
     )
     idfs = {r["term"]: r["idf"] for r in trows}
     if sum(r["df"] for r in trows) > driver_postings_max:
-        rows = topk_distributed_pruned(index, query, k).collect()
+        rows = topk_distributed(index, query, k).collect()
         return [(int(r["docid"]), float(r["score"])) for r in rows]
     blocks = _fetch_term_blocks(index, [t for t in terms if t in idfs])
-    if strategy == "auto":
-        n_docs = max(1, index.stats["n_docs"])
-        total_postings = sum(
-            sum(b[4] for b in blks) for blks in blocks.values()
-        )
-        per_term = total_postings / max(1, len(blocks))
-        strategy = (
-            "bulk" if per_term >= BULK_SCORE_DF_FRACTION * n_docs else "wand"
-        )
-    if strategy == "bulk":
-        return _topk_bulk(blocks, idfs, avgdl, k)
-    cursors = [
-        _Cursor(t, idfs[t], blocks[t]) for t in terms if blocks.get(t)
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    if not cursors:
-        return []
+    return _topk_bulk(blocks, idfs, index.stats["avgdl"], k)
 
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -docid)
-    theta = 0.0
-
-    def push(docid: int, score: float) -> None:
-        nonlocal theta
-        item = (score, -docid)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-            if len(heap) == k:
-                theta = heap[0][0]
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-            theta = heap[0][0]
-
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda c: c.doc)
-        # pivot: smallest prefix of (doc-sorted) cursors whose UB sum can
-        # beat theta. Docs strictly below pivot_doc cannot enter the top-k,
-        # so cursors may be advanced past them (classic WAND invariant).
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if len(heap) < k or acc > theta - SCORE_SLACK:
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break  # no remaining document can beat theta
-        pivot_doc = live[pivot_i].doc
-
-        if len(heap) >= k:
-            # Block-max refinement (BMW): shallow-align the blocks of every
-            # cursor at doc <= pivot_doc (skipped postings all have
-            # docid < pivot_doc — already excluded by the WAND invariant),
-            # then test the block-max sum against theta.
-            group = [c for c in live if c.doc <= pivot_doc]
-            for c in group:
-                # metadata-only shallow advance; decode once on landing
-                moved = False
-                while not c.exhausted and c.block_last < pivot_doc:
-                    c.bi += 1
-                    moved = True
-                if moved:
-                    c._load()
-            group = [c for c in group if not c.exhausted]
-            if not group:
-                continue
-            bm_sum = sum(c.block_max for c in group)
-            if bm_sum <= theta - SCORE_SLACK:
-                # No doc in [pivot_doc, boundary] scored from the group's
-                # current blocks can beat theta; jump past the smallest
-                # block boundary, clamped at the next non-group cursor's doc
-                # so no doc with cross-cursor contributions is skipped.
-                boundary = min(c.block_last for c in group)
-                target = boundary + 1
-                nxt = min(
-                    (c.doc for c in live
-                     if not c.exhausted and c.doc > pivot_doc),
-                    default=None,
-                )
-                if nxt is not None:
-                    target = min(target, nxt)
-                target = max(target, pivot_doc + 1)
-                for c in group:
-                    if not c.exhausted and c.doc < target:
-                        c.next_geq(target)
-                continue
-
-        # deep alignment: move every cursor below the pivot up to it
-        # (safe per the WAND invariant; no-op when the heap isn't full,
-        # because then pivot_i == 0 == the smallest doc).
-        advanced = False
-        for c in live:
-            if not c.exhausted and c.doc < pivot_doc:
-                c.next_geq(pivot_doc)
-                advanced = True
-        if advanced:
-            continue  # re-sort and re-pivot with fresh positions
-
-        # all live cursors sit at doc >= pivot_doc → fully score pivot_doc
-        s = 0.0
-        for c in live:
-            if not c.exhausted and c.doc == pivot_doc:
-                s += bm25_term_score(c.tf, c.dl, avgdl, c.idf)
-                c.advance()
-        # the heap holds the EMITTED (rounded) score: at the k boundary the
-        # raw comparison could keep a doc the rounded (score desc, docid
-        # asc) contract would drop
-        push(pivot_doc, round(s, SCORE_ROUND))
-
-    out = sorted(
-        ((-d, round(s, SCORE_ROUND)) for s, d in heap),
-        key=lambda x: (-x[1], x[0]),
-    )
-    return [(d, s) for d, s in out]
-
-
-# ---------------------------------------------------------------------------
-# Phrase search
-# ---------------------------------------------------------------------------
 
 # ---------------------------------------------------------------------------
 # Result assembly: url + snippet (the reference frontend's answer shape)
@@ -1161,6 +639,10 @@ def topk_with_urls(
         .orderBy(F.col("score").desc(), F.col("docid").asc())
     )
 
+
+# ---------------------------------------------------------------------------
+# Phrase search
+# ---------------------------------------------------------------------------
 
 def _phrase_term_offsets(phrase: str) -> dict[str, list[int]]:
     """unique term → 0-based offsets of its occurrences in the phrase."""

@@ -327,6 +327,14 @@ def hist_counters(
     )
 
 
+def _check_q_pct(qs: list[int]) -> None:
+    """Quantiles are percents in 1..100: a rank-0 (q < 1) or past-the-end
+    (q > 100) target matches no row and would silently vanish."""
+    bad = [q for q in qs if not 1 <= q <= 100]
+    if bad:
+        raise ValueError(f"q_pct must be in 1..100, got {bad}")
+
+
 def hist_quantiles(
     df: DataFrame,
     col: str,
@@ -346,7 +354,9 @@ def hist_quantiles(
 
     Shape: the sketch is a <= ``buckets``-row agg (mergeable, broadcast
     for the cum pass); exact goes through one sort-based window — the
-    expensive verifier the sketch exists to avoid at ingest time."""
+    expensive verifier the sketch exists to avoid at ingest time.
+    Raises ``ValueError`` for a ``q_pct`` outside 1..100."""
+    _check_q_pct(qs)
     n_row = df.agg(F.count(F.lit(1)).alias("n"))
     hist = hist_counters(df, col, lo, hi, buckets)
     from pyspark.sql import Window
@@ -401,6 +411,7 @@ def hist_quantiles_sql(
     """DuckDB mirror of :func:`hist_quantiles` — same literal injection
     (the Python-computed cell width appears verbatim in both engines) and
     the same operation order in the bucket expression."""
+    _check_q_pct(qs)
     cell = (hi - lo) / buckets
     vals = ", ".join(f"({int(q)})" for q in qs)
     bucket_expr = (

@@ -3,7 +3,7 @@
 Builds the block index over the deterministic synthetic corpus and requires:
 - identical doc stats (n_docs, dl per doc, avgdl)
 - rank-identical BM25 top-k (docids) with scores equal to 1e-9, for BOTH
-  the distributed Spark plan and the driver-side Block-Max WAND
+  the distributed Spark plan and the driver-side vectorized scorer
 - identical phrase-search doc sets
 - skew-bucketing invariance: tiny bucket size (forces heavy-term splits)
   produces identical results to the unbucketed build
@@ -88,61 +88,12 @@ def test_topk_distributed_matches_oracle(index, oracle, q):
 
 
 @pytest.mark.parametrize("q", QUERIES)
-def test_topk_distributed_pruned_matches_oracle(index, oracle, q):
-    """The 3-phase block-max-pruned distributed plan is EXACT: identical
-    docids AND scores to the oracle (and hence to topk_distributed) for
-    every query shape — multi-term, stopword-only, zero-hit term."""
-    got = [
-        (r["docid"], r["score"])
-        for r in Q.topk_distributed_pruned(
-            index, q, k=50, min_blocks=0
-        ).collect()
-    ]
-    want = oracle.topk(q, k=50)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert gs == pytest.approx(ws, abs=1e-9)
-
-
-def test_topk_distributed_pruned_small_k_and_aggressive_seed(index, oracle):
-    """k=5 with a 1-block seed prunes hardest; still exact. k larger than
-    the match set falls back to the unpruned plan and stays exact; so
-    does the default min_blocks bailout on this small index."""
-    q = "demosthenes prince andrew"
-    got = [
-        (r["docid"], r["score"])
-        for r in Q.topk_distributed_pruned(
-            index, q, k=5, seed_blocks_per_term=1, min_blocks=0
-        ).collect()
-    ]
-    want = oracle.topk(q, k=5)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    big = Q.topk_distributed_pruned(index, "gentlemen", k=100_000, min_blocks=0)
-    ref = Q.topk_distributed(index, "gentlemen", k=100_000)
-    assert sorted((r["docid"], round(r["score"], 9)) for r in big.collect()) \
-        == sorted((r["docid"], round(r["score"], 9)) for r in ref.collect())
-    bail = Q.topk_distributed_pruned(index, q, k=5)  # default min_blocks
-    assert [(r["docid"],) for r in bail.collect()] == [(d,) for d, _ in want]
-
-
-@pytest.mark.parametrize("q", QUERIES)
 def test_topk_wand_matches_oracle(index, oracle, q):
     got = Q.topk_wand(index, q, k=50)
     want = oracle.topk(q, k=50)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9)
-
-
-@pytest.mark.parametrize("q", QUERIES)
-def test_topk_strategies_identical(index, oracle, q):
-    """Forced DAAT-WAND and forced vectorized-bulk must return identical
-    (docid, score) lists — 'auto' only ever picks between these two."""
-    wand = Q.topk_wand(index, q, k=40, strategy="wand")
-    bulk = Q.topk_wand(index, q, k=40, strategy="bulk")
-    assert [d for d, _ in wand] == [d for d, _ in bulk]
-    for (_, a), (_, b) in zip(wand, bulk):
-        assert a == pytest.approx(b, abs=1e-9)
 
 
 def test_topk_batch_matches_oracle(index, oracle):
@@ -160,7 +111,7 @@ def test_topk_batch_matches_oracle(index, oracle):
             assert got.get(qid, []) == want, (q, decimals)
 
 
-def test_wand_small_k_prunes_but_exact(index, oracle):
+def test_topk_wand_small_k_exact(index, oracle):
     for q in ("gentlemen", "bloodthirsty soldier", "prince andrew"):
         got = Q.topk_wand(index, q, k=5)
         want = oracle.topk(q, k=5)
@@ -169,7 +120,7 @@ def test_wand_small_k_prunes_but_exact(index, oracle):
 
 def test_topk_wand_driver_guard_falls_back(index, oracle, monkeypatch):
     """Above ``driver_postings_max`` the interactive path must NEVER
-    collect block bytes — it hands off to topk_distributed_pruned with an
+    collect block bytes — it hands off to topk_distributed with an
     identical result. _fetch_term_blocks is poisoned to prove the bytes
     collect does not run when the guard fires."""
     q = "bloodthirsty soldier"
@@ -178,7 +129,16 @@ def test_topk_wand_driver_guard_falls_back(index, oracle, monkeypatch):
         Q, "_fetch_term_blocks",
         lambda *a, **k: pytest.fail("guard did not fire: bytes collected"),
     )
+    handoffs = []
+    plain = Q.topk_distributed
+
+    def spy(*a, **kw):
+        handoffs.append(a[1])
+        return plain(*a, **kw)
+
+    monkeypatch.setattr(Q, "topk_distributed", spy)
     got = Q.topk_wand(index, q, k=25, driver_postings_max=0)
+    assert handoffs == [q]
     assert got == want
     assert [d for d, _ in got] == [d for d, _ in oracle.topk(q, k=25)]
 

@@ -174,6 +174,26 @@ def test_hits_fixed_nodes_universe(spark):
     assert rows[0]["auth"] == pytest.approx(1.5)
 
 
+def test_hits_edgeless_nodes_score_zero_not_null(spark):
+    """Explicit nodes with no edges: every round's L1 sum is 0, which must
+    normalize to 0.0 scores in both engines — not NULL (DuckDB's 0/0) or
+    a DIVIDE_BY_ZERO error (Spark's under ANSI mode)."""
+    import duckdb
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    nodes = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    rows = PR.hits(edges, nodes=nodes, iters=3).collect()
+    assert sorted((r["id"], r["auth"], r["hub"]) for r in rows) == [
+        (0, 0.0, 0.0), (1, 0.0, 0.0), (2, 0.0, 0.0)
+    ]
+    # a one-row table has no synthetic edges (no other doc to link to)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE one AS SELECT 5::BIGINT AS doc_id")
+    assert con.sql(PR.hits_sql(iters=3, table="one")).fetchall() == [
+        (5, 0.0, 0.0)
+    ]
+
+
 def test_pagerank_custom_graph_matches_mirror(spark):
     """pagerank over an arbitrary coarsened graph (host-graph shape)
     still matches the Python mirror — guards the nodes/edges injection

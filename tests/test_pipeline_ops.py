@@ -2050,6 +2050,22 @@ def test_hist_quantiles_error_bounded_by_cell(spark):
     assert abs(got[50]["exact"] - 500) <= 1
 
 
+def test_hist_quantiles_rejects_out_of_range_pct(spark):
+    """q_pct 0 has target rank 0 and q_pct > 100 a rank past n: neither
+    matches a row, so both engines must refuse them instead of silently
+    returning fewer quantiles than asked for."""
+    from search_engine_spark.operators import sketches as SK
+
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "v double")
+    for qs in ([0, 50], [50, 101], [-5]):
+        with pytest.raises(ValueError, match="q_pct"):
+            SK.hist_quantiles(df, "v", qs, lo=0.0, hi=10.0, buckets=10)
+        with pytest.raises(ValueError, match="q_pct"):
+            SK.hist_quantiles_sql("v", qs, lo=0.0, hi=10.0, buckets=10)
+    got = SK.hist_quantiles(df, "v", [1, 100], lo=0.0, hi=10.0, buckets=10)
+    assert sorted(r["q_pct"] for r in got.collect()) == [1, 100]
+
+
 def test_hist_counters_mergeable_and_clamped(spark):
     from pyspark.sql import functions as F2
 
