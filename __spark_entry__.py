@@ -69,10 +69,10 @@ STOP_LIST = ", ".join(f"'{s}'" for s in sorted(STOPWORDS))
 
 
 # ---------------------------------------------------------------------------
-# Index cache: build the block index over the sf documents table once
+# Index cache: build the index over the sf documents table once
 # ---------------------------------------------------------------------------
 
-INDEX_FORMAT = 3  # bump when the on-disk block format/semantics change
+INDEX_FORMAT = 4  # bump when the on-disk index format/semantics change
 
 
 def _cached_index(
@@ -259,8 +259,8 @@ def q_boost_fusion(spark, sf_dir):
 
 
 def q_bm25_index_all(spark, sf_dir):
-    """The full block-index pipeline (build → partition-pruned scan →
-    decode → score): k larger than the corpus so the result is the complete
+    """The full index pipeline (build → term-pruned postings scan →
+    score): k larger than the corpus so the result is the complete
     match set — directly comparable to the SQL oracle."""
     idx = _cached_index(spark, sf_dir)
     out = IQ.topk_distributed(idx, "spark table join", k=10_000, decimals=6)
@@ -480,7 +480,7 @@ def q_phrase(spark, sf_dir):
 
 
 def q_phrase_index(spark, sf_dir):
-    """Q9 via the index: distributed position-join over decoded blocks."""
+    """Q9 via the index: distributed position-join over exploded positions."""
     idx = _cached_index(spark, sf_dir)
     return IQ.phrase_docs_distributed(idx, "hash join")
 
@@ -2168,7 +2168,7 @@ def q_serving_suite(spark, sf_dir):
 
 
 def q_topk_deletes(spark, sf_dir):
-    """Tombstone-masked BM25 top-k: the block index queried as if the
+    """Tombstone-masked BM25 top-k: the index queried as if the
     deleted docs (doc_id % 7 == 3) were never indexed — live df/n_docs/
     avgdl, Lucene-style deletes without segment rewrites. Oracle = plain
     BM25 over the surviving corpus (rebuild-equivalence)."""
@@ -2217,7 +2217,7 @@ def q_crawl_delta(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full pipeline on sf0.001 — block-index build over the
+    """Flagship: full pipeline on sf0.001 — index build over the
     documents table, then the distributed BM25 query plan."""
     idx = _cached_index(spark, SF_DEFAULT)
     return IQ.topk_distributed(idx, "spark table join", k=100).select(

@@ -6,7 +6,7 @@ Cluster usage (north_rule launch mode):
         --input  <pages parquet/iceberg path> \
         --output <index warehouse dir> \
         [--lang en] [--no-stem] [--cap 1500] [--chunks 0] \
-        [--partitions N] [--postings-per-bucket 50000] [--block-size 128]
+        [--partitions N]
 
     # package the library for --py-files:
     #   cd /root/repo && zip -r se_spark.zip search_engine_spark
@@ -39,8 +39,6 @@ def main() -> None:
     ap.add_argument("--chunks", type=int, default=0,
                     help=">0: resumable chunked build with lineage")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--postings-per-bucket", type=int, default=50_000)
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--cores", type=int, default=None,
                     help="local mode only; under spark-submit leave unset")
     args = ap.parse_args()
@@ -63,16 +61,13 @@ def main() -> None:
         stats = resumable_build(
             pages, args.output, n_chunks=args.chunks, lang=args.lang,
             stem=not args.no_stem, cap=args.cap,
-            postings_per_bucket=args.postings_per_bucket,
-            block_size=args.block_size,
         )
     else:
         from search_engine_spark.operators.indexer import build_index
 
         stats = build_index(
             pages, args.output, lang=args.lang, stem=not args.no_stem,
-            cap=args.cap, postings_per_bucket=args.postings_per_bucket,
-            block_size=args.block_size, partitions=args.partitions,
+            cap=args.cap, partitions=args.partitions,
         )
     dt = time.perf_counter() - t0
     print(json.dumps({**stats, "wall_s": round(dt, 2),

@@ -8,7 +8,7 @@
         --segments <ingest work dir> --queries "prince andrew" [-k 100]
 
 Prints one JSON line per query: {"query": ..., "topk": [[docid, score], ...]}.
-Uses the driver-side exact top-k (``topk_wand``: one pruned block fetch,
+Uses the driver-side exact top-k (``topk_wand``: one term-pruned postings fetch,
 vectorized BM25 scoring) — for bulk query sets the
 distributed plan (operators/query.topk_distributed) amortizes better.
 """

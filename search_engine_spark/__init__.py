@@ -8,17 +8,16 @@ idiomatic Spark DataFrame engine:
   ``(url string, warc_ts timestamp, html binary, text string, lang string)``
 - HTML→text extraction / tokenization / Porter stemming as vectorized pandas UDFs
   (reference: src/cis5550/jobs/IndexerProject.java:262-421)
-- posting lists built by explode → skew-salted repartition by term → groupBy →
-  delta-gap + varint compressed blocks with block-max metadata
+- posting lists as plain parquet columns (term, docid, tf, dl, positions),
+  range-partitioned and sorted by (term, docid)
   (replaces the reference's side-effect KVS writes, IndexerProject.java:54-167)
-- query-time BM25 top-k with block-max WAND pruning
+- query-time exact BM25 top-k over the term-pruned postings scan
   (replaces the reference's sampled tf-idf + boosts, frontend/Master.java:356-601)
 - resumable builds with per-partition checkpoints, lineage and metrics tables.
 
 Everything here derives from public knowledge only: the Apache Spark / PySpark
 API, the published Porter (1980) stemming algorithm, standard IR textbook
-posting-list compression (delta-gap + varint), BM25 (Robertson/Sparck Jones),
-and block-max WAND (Ding & Suel, SIGIR 2011).
+inverted indexes and BM25 (Robertson/Sparck Jones).
 """
 
 __version__ = "0.1.0"

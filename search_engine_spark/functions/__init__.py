@@ -1,3 +1,3 @@
-"""Vectorized (pandas/Arrow) column functions and pure-Python codecs used
-inside them. UDFs here are the ONLY Python that runs per-row in the engine;
-everything else is built-in pyspark.sql.functions."""
+"""Hash-family column functions shared by the engine and its DuckDB
+oracles (``hashing``): each hash has a Spark SQL expression, a DuckDB SQL
+string and a pure-Python reference that derive the same integers."""

@@ -1,2 +1,2 @@
-"""Engine operators: index construction, posting-block building/merging,
+"""Engine operators: index construction, postings layout and merging,
 query-time scoring, dedup, similarity search, text analysis."""

@@ -7,13 +7,10 @@ plan:
 
     pages ──filter(lang)──> docid assignment (distributed dense rank)
           ──mapInArrow(tokenize: extraction-parity tokenizer + Porter
-            dual-indexing)──> (docid, term, tf, positions-bytes, dl)
+            dual-indexing)──> (docid, term, tf, positions, dl)
           ──groupBy(term).agg──> term stats (df, cf, idf)
-          ──heavy-term detection──> bucket postings by docid range for
-            skewed terms (explicit skew handling per north_rule)
-          ──repartitionByRange(term,bucket) + sortWithinPartitions +
-            mapInArrow(stream encoder)──> delta-gap+varint posting BLOCKS
-            with block-max BM25 metadata (functions/codec.py) → parquet
+          ──repartitionByRange(term, docid) + sortWithinPartitions──>
+            postings: one plain parquet row per (term, docid)
 
 Scale design notes (the parts that must survive 10^12 docs):
 
@@ -23,57 +20,40 @@ Scale design notes (the parts that must survive 10^12 docs):
   driver-side scan — the reference's sequential global counter
   (IndexerProject.java:210-235) is the anti-pattern this replaces. The
   only driver state is one count per partition.
-* **Skew**: stop-word-head terms have posting lists ~N long; a naive
-  groupBy(term) would put an entire such list in one task. Terms whose df
-  exceeds ``postings_per_bucket`` are split into docid-RANGE buckets
-  (deterministic, not random salt), so every task encodes a bounded chunk
-  and — because buckets are disjoint, ordered docid ranges — concatenating
-  the per-bucket blocks in (bucket, block_id) order yields the globally
-  docid-sorted posting list with NO re-merge pass. Block-max metadata is
-  exact per block, so it is unaffected by the split.
-* **Storage layout**: postings are range-partitioned and sorted by term so
-  parquet row-group min/max statistics prune term lookups; in production
-  the same DataFrames commit to Iceberg tables (partition pruning +
-  snapshots); this container lacks the Iceberg runtime jar so the catalog
-  writes plain parquet with an identical schema.
+* **Skew**: stop-word-head terms have posting lists ~N long. The postings
+  shuffle range-partitions on (term, docid), not term alone, so the range
+  sampler cuts one heavy term's list into consecutive docid ranges across
+  tasks — no task holds a whole head-term list, and the partitions
+  concatenate into the globally (term, docid)-sorted table.
+* **Storage layout**: postings are plain columns — parquet's own
+  encodings compress them and the vectorized scan decodes them, so no
+  query path runs Python over posting data. Range partitioning + sort on
+  term lets parquet row-group min/max statistics prune term lookups, and
+  a scan that does not select ``positions`` never reads them. In
+  production the same DataFrames commit to Iceberg tables (partition
+  pruning + snapshots); this container lacks the Iceberg runtime jar so
+  the catalog writes plain parquet with an identical schema.
 
 Index warehouse layout (directory = one index):
-    postings/   term, bucket, block_id, first_docid, last_docid, n, block_max, block bytes
+    postings/   term, docid, tf, dl, positions (1-based, ascending)
     terms/      term, df, cf, idf
     docs/       docid, url, dl
-    stats.json  n_docs, avgdl, build metadata
+    stats.json  n_docs, docid_space, avgdl, build metadata
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from search_engine_spark.catalog import Warehouse
-from search_engine_spark.functions.codec import DEFAULT_BLOCK_SIZE
 from search_engine_spark.operators.text_ops import bm25_idf_col
 from search_engine_spark.oracle.text import doc_postings
 
-# A "heavy" term's postings are split into docid-range buckets of this many
-# postings (expected), keeping encode tasks bounded regardless of term skew.
-DEFAULT_POSTINGS_PER_BUCKET = 50_000
-
-# positions carried as pre-encoded varint bytes (codec.encode_positions):
-# the block format's per-posting positions section verbatim, so block
-# assembly is pure byte concatenation and the term shuffle moves flat
-# binary instead of per-row integer arrays (≈3× lighter rows).
 POSTINGS_SCHEMA = (
-    "docid long, term string, tf int, positions binary, dl int"
-)
-
-BLOCKS_SCHEMA = (
-    "term string, bucket int, block_id int, first_docid long, "
-    "last_docid long, n int, block_max double, block binary"
+    "docid long, term string, tf int, positions array<int>, dl int"
 )
 
 
@@ -99,7 +79,7 @@ def assign_docids(
          boundaries — ``repartitionByRange`` re-samples per action, so an
          unmaterialized plan could assign different partition ids between
          the counting pass and downstream consumers (a silent duplicate-id
-         bug; caught by an ascending-docid assertion in the block encoder).
+         bug; ``check_docid_space`` is the global check every build runs).
       2. per-partition counts (driver holds one long per partition),
          prefix-sum → partition offsets.
       3. docid = offset[_pid] + (row_number over _pid ordered by url) − 1 —
@@ -124,15 +104,7 @@ def assign_docids(
         .parquet(snap_path)
     )
     snap = spark.read.parquet(snap_path)
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in snap.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    offsets = _docid_offsets(spark, snap_path)
 
     from pyspark.sql import Window
 
@@ -178,7 +150,7 @@ class _RunningIds:
     (interleaved pids). It cannot see a snapshot file split ACROSS tasks
     (both halves would restart the pid's counter at offset+0 in separate
     workers) — that failure is caught by the global count/distinct/max
-    docid invariant checked in ``_build_index_inner``.
+    docid invariant, ``check_docid_space``.
     """
 
     def __init__(self, offsets: dict[int, int]):
@@ -226,6 +198,71 @@ def docid_url_table(spark, snap_path: str, offsets: dict[int, int]) -> DataFrame
     return snap.mapInArrow(run, schema="docid long, url string")
 
 
+class _PostingsBatch:
+    """Arrow output buffer of the tokenize stage: one row per
+    (docid, term) with its positions as a ``list<int32>`` built from one
+    flat values buffer + offsets (no per-row Python lists cross into
+    Arrow)."""
+
+    def __init__(self, stem: bool, cap: int | None):
+        import pyarrow as pa
+
+        self.stem = stem
+        self.kw = {} if cap is None else {"cap": cap}
+        self.schema = pa.schema(
+            [
+                ("docid", pa.int64()),
+                ("term", pa.string()),
+                ("tf", pa.int32()),
+                ("positions", pa.list_(pa.int32())),
+                ("dl", pa.int32()),
+            ]
+        )
+        self._clear()
+
+    def _clear(self):
+        self.docid: list[int] = []
+        self.term: list[str] = []
+        self.tf: list[int] = []
+        self.dl: list[int] = []
+        self.pos: list[int] = []
+        self.pos_off: list[int] = [0]
+
+    def __len__(self) -> int:
+        return len(self.docid)
+
+    def add(self, did: int, text: str) -> None:
+        per_term, dl = doc_postings(text, stem=self.stem, **self.kw)
+        for term, plist in per_term.items():
+            self.docid.append(did)
+            self.term.append(term)
+            self.tf.append(len(plist))
+            self.dl.append(dl)
+            self.pos.extend(plist)
+            self.pos_off.append(len(self.pos))
+
+    def flush(self):
+        import numpy as np
+        import pyarrow as pa
+
+        positions = pa.ListArray.from_arrays(
+            pa.array(np.asarray(self.pos_off, dtype=np.int32)),
+            pa.array(np.asarray(self.pos, dtype=np.int32)),
+        )
+        out = pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.asarray(self.docid, dtype=np.int64)),
+                pa.array(self.term, pa.string()),
+                pa.array(np.asarray(self.tf, dtype=np.int32)),
+                positions,
+                pa.array(np.asarray(self.dl, dtype=np.int32)),
+            ],
+            schema=self.schema,
+        )
+        self._clear()
+        return out
+
+
 def tokenize_postings_from_snapshot(
     spark,
     snap_path: str,
@@ -238,10 +275,6 @@ def tokenize_postings_from_snapshot(
     fly (no window, no extra shuffle of the text) and tokenize.
     ``from_html`` runs the pinned HTML→text extraction first (the full
     Common-Crawl pipeline; reference IndexerProject.java:262-276)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from search_engine_spark.functions.codec import encode_positions
     from search_engine_spark.oracle.text import extract_text
 
     content_col = "html" if from_html else "text"
@@ -250,60 +283,23 @@ def tokenize_postings_from_snapshot(
     # second full url decode on the biggest read of the build
     snap = spark.read.parquet(snap_path).select(content_col, "_pid")
     b_off = spark.sparkContext.broadcast(offsets)
-    kw = {} if cap is None else {"cap": cap}
-
-    out_schema = pa.schema(
-        [
-            ("docid", pa.int64()),
-            ("term", pa.string()),
-            ("tf", pa.int32()),
-            ("positions", pa.binary()),
-            ("dl", pa.int32()),
-        ]
-    )
 
     def run(batches):
         ids = _RunningIds(b_off.value)
-        o_docid: list[int] = []
-        o_term: list[str] = []
-        o_tf: list[int] = []
-        o_dl: list[int] = []
-        o_pos: list[bytes] = []
-
-        def flush():
-            out = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(o_docid, dtype=np.int64)),
-                    pa.array(o_term, pa.string()),
-                    pa.array(np.asarray(o_tf, dtype=np.int32)),
-                    pa.array(o_pos, pa.binary()),
-                    pa.array(np.asarray(o_dl, dtype=np.int32)),
-                ],
-                schema=out_schema,
-            )
-            o_docid.clear(); o_term.clear(); o_tf.clear()
-            o_dl.clear(); o_pos.clear()
-            return out
-
+        out = _PostingsBatch(stem, cap)
         for batch in batches:
             texts_in = batch.column(0).to_pylist()
             docids_in = ids.assign(batch.column(1).to_pylist())
             for did, txt in zip(docids_in, texts_in):
                 if from_html:
                     txt = extract_text(txt or b"")
-                per_term, dl = doc_postings(txt or "", stem=stem, **kw)
-                for term, plist in per_term.items():
-                    o_docid.append(did)
-                    o_term.append(term)
-                    o_tf.append(len(plist))
-                    o_dl.append(dl)
-                    o_pos.append(encode_positions(plist))
+                out.add(did, txt or "")
                 # bounded output batches: one batch per input batch can hit
                 # 100+ MB of arrow direct memory on the JVM reader side
-                if len(o_docid) >= 131_072:
-                    yield flush()
-        if o_docid:
-            yield flush()
+                if len(out) >= 131_072:
+                    yield out.flush()
+        if len(out):
+            yield out.flush()
 
     return snap.mapInArrow(run, schema=POSTINGS_SCHEMA)
 
@@ -327,59 +323,22 @@ def tokenize_postings(
     1500-token cap, plus the document length ``dl`` (number of capped valid
     positions) repeated on every row so BM25 stats need no extra join.
     """
-    import numpy as np
-    import pyarrow as pa
-
     src = docs.select(F.col(docid).alias("docid"), F.col(text).alias("text"))
-    kw = {} if cap is None else {"cap": cap}
-
-    from search_engine_spark.functions.codec import encode_positions
-
-    out_schema = pa.schema(
-        [
-            ("docid", pa.int64()),
-            ("term", pa.string()),
-            ("tf", pa.int32()),
-            ("positions", pa.binary()),
-            ("dl", pa.int32()),
-        ]
-    )
 
     def run(batches):
-        # arrow-native output; positions emitted as the block format's
-        # per-posting varint section (flat binary — no integer arrays).
+        out = _PostingsBatch(stem, cap)
         for batch in batches:
             docids_in = batch.column(0).to_pylist()
             texts_in = batch.column(1).to_pylist()
-            o_docid: list[int] = []
-            o_term: list[str] = []
-            o_tf: list[int] = []
-            o_dl: list[int] = []
-            o_pos: list[bytes] = []
             for did, txt in zip(docids_in, texts_in):
-                per_term, dl = doc_postings(txt or "", stem=stem, **kw)
-                for term, plist in per_term.items():
-                    o_docid.append(did)
-                    o_term.append(term)
-                    o_tf.append(len(plist))
-                    o_dl.append(dl)
-                    o_pos.append(encode_positions(plist))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(o_docid, dtype=np.int64)),
-                    pa.array(o_term, pa.string()),
-                    pa.array(np.asarray(o_tf, dtype=np.int32)),
-                    pa.array(o_pos, pa.binary()),
-                    pa.array(np.asarray(o_dl, dtype=np.int32)),
-                ],
-                schema=out_schema,
-            )
+                out.add(did, txt or "")
+            yield out.flush()
 
     return src.mapInArrow(run, schema=POSTINGS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Stage 3: term statistics + heavy-term detection
+# Stage 3: term statistics, docid check, postings layout
 # ---------------------------------------------------------------------------
 
 def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
@@ -391,161 +350,40 @@ def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
     ).withColumn("idf", bm25_idf_col(n_docs, F.col("df")))
 
 
-# ---------------------------------------------------------------------------
-# Stage 4: posting-block build (skew-bucketed)
-# ---------------------------------------------------------------------------
+def check_docid_space(ids: DataFrame) -> int:
+    """Global docid invariant: ``ids`` (one row per assigned docid, column
+    ``docid``) holds every id in 0..n-1 exactly once. Returns n, the docid
+    space. One aggregate; raises ``RuntimeError`` on a duplicate or a gap.
 
-def build_blocks_arrow(
-    postings: DataFrame,
-    terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    postings_per_bucket: int = DEFAULT_POSTINGS_PER_BUCKET,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Arrow-native block build in ONE shuffle.
-
-    ``repartitionByRange(term, bucket) → sortWithinPartitions(term, bucket,
-    docid) → mapInArrow(stream encoder)``: groups arrive contiguous and
-    docid-sorted, so the encoder is a zero-copy streaming pass over Arrow
-    batches — positions stay a flat values+offsets ListArray end to end (no
-    per-row Python lists), and the output is already term-range-laid-out
-    for the parquet write (no second shuffle). Heavy terms are docid-range
-    bucketed (deterministic docid ranges; see module docstring).
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from search_engine_spark.functions.codec import encode_block_posbytes
-    from search_engine_spark.oracle.bm25 import B, K1
-
-    spark = postings.sparkSession
-    parts = partitions or spark.sparkContext.defaultParallelism
-    bucket_span = max(1, postings_per_bucket)
-    heavy = terms.filter(F.col("df") > postings_per_bucket).select("term")
-    tagged = (
-        postings.join(
-            F.broadcast(heavy.withColumn("_heavy", F.lit(True))), "term", "left"
+    Per-task checks (``_RunningIds``) cannot see a duplicate produced by
+    another task — a snapshot file split across tasks restarts its
+    counter in each — but a global count/distinct/max mismatch can.
+    Token-less pages consume a docid but never reach postings/docs, so the
+    space can exceed n_docs; merge shifts by the space, not by n_docs, or
+    shifted b-side ids would collide with a-side ids."""
+    row = ids.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("docid").alias("nd"),
+        F.max("docid").alias("mx"),
+    ).collect()[0]
+    n = int(row["n"])
+    if row["nd"] != n or (n and row["mx"] + 1 != n):
+        raise RuntimeError(
+            f"docid assignment corrupt: {n} rows, {row['nd']} distinct ids, "
+            f"max {row['mx']} (snapshot file split across tasks?)"
         )
-        .withColumn(
-            "bucket",
-            F.when(
-                F.col("_heavy").isNotNull(),
-                (F.col("docid") / F.lit(bucket_span)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .select("term", "bucket", "docid", "tf", "positions", "dl")
-        .repartitionByRange(parts, "term", "bucket")
-        .sortWithinPartitions("term", "bucket", "docid")
+    return n
+
+
+def sorted_postings(postings: DataFrame, partitions: int) -> DataFrame:
+    """The postings table layout: (term, docid, tf, dl, positions) rows,
+    range-partitioned and sorted by (term, docid). One shuffle; ranges on
+    the pair split a heavy term's list by docid across tasks."""
+    return (
+        postings.select("term", "docid", "tf", "dl", "positions")
+        .repartitionByRange(partitions, "term", "docid")
+        .sortWithinPartitions("term", "docid")
     )
-
-    out_fields = pa.schema(
-        [
-            ("term", pa.string()),
-            ("bucket", pa.int32()),
-            ("block_id", pa.int32()),
-            ("first_docid", pa.int64()),
-            ("last_docid", pa.int64()),
-            ("n", pa.int32()),
-            ("block_max", pa.float64()),
-            ("block", pa.binary()),
-        ]
-    )
-
-    def emit_groups(tbl: "pa.Table", starts: "np.ndarray"):
-        """Encode each contiguous (term,bucket) group of a docid-sorted
-        table; ``starts`` are the group start offsets (first = 0)."""
-        tbl = tbl.combine_chunks()
-        docid = tbl.column("docid").to_numpy()
-        tf = tbl.column("tf").to_numpy().astype(np.int64, copy=False)
-        dl_i = tbl.column("dl").to_numpy().astype(np.int64, copy=False)
-        dl = dl_i.astype(np.float64, copy=False)
-    # positions: a BinaryArray = uint8 values buffer + offsets; block
-        # positions regions are raw slices of the values buffer (zero-copy,
-        # no per-row Python objects)
-        pos = tbl.column("positions")
-        pos = pos.chunk(0) if isinstance(pos, pa.ChunkedArray) else pos
-        off_buf = np.frombuffer(pos.buffers()[1], dtype=np.int32)
-        offs = off_buf[pos.offset : pos.offset + len(pos) + 1].astype(np.int64)
-        base = offs[0]
-        offs = offs - base
-        raw = np.frombuffer(pos.buffers()[2], dtype=np.uint8)
-        raw = raw[base : base + offs[-1]] if len(offs) else raw[:0]
-        # materialize term/bucket ONLY at group starts (a full to_numpy of
-        # the string column would allocate one Python object per row)
-        starts_idx = pa.array(starts, pa.int64())
-        g_terms = tbl.column("term").take(starts_idx).to_pylist()
-        g_buckets = tbl.column("bucket").take(starts_idx).to_pylist()
-        norm = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-        bounds = np.append(starts, len(tbl))
-        o_term, o_bucket, o_bid, o_first, o_last, o_n, o_max, o_blob = (
-            [], [], [], [], [], [], [], []
-        )
-        for gi in range(len(starts)):
-            g0, g1 = int(bounds[gi]), int(bounds[gi + 1])
-            t, bk = g_terms[gi], int(g_buckets[gi])
-            for bi, s in enumerate(range(g0, g1, block_size)):
-                e = min(s + block_size, g1)
-                blob = encode_block_posbytes(
-                    docid[s:e],
-                    tf[s:e],
-                    dl_i[s:e],
-                    raw[offs[s] : offs[e]].tobytes(),
-                )
-                o_term.append(t)
-                o_bucket.append(bk)
-                o_bid.append(bi)
-                o_first.append(int(docid[s]))
-                o_last.append(int(docid[e - 1]))
-                o_n.append(e - s)
-                o_max.append(float(norm[s:e].max()))
-                o_blob.append(blob)
-        if o_term:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_term, pa.string()),
-                    pa.array(o_bucket, pa.int32()),
-                    pa.array(o_bid, pa.int32()),
-                    pa.array(o_first, pa.int64()),
-                    pa.array(o_last, pa.int64()),
-                    pa.array(o_n, pa.int32()),
-                    pa.array(o_max, pa.float64()),
-                    pa.array(o_blob, pa.binary()),
-                ],
-                schema=out_fields,
-            )
-
-    def group_starts(tbl: "pa.Table") -> "np.ndarray":
-        n = len(tbl)
-        if n <= 1:
-            return np.zeros(min(n, 1), dtype=np.int64)
-        term = tbl.column("term").combine_chunks()
-        buck = tbl.column("bucket").combine_chunks()
-        neq = pc.or_(
-            pc.not_equal(term.slice(1), term.slice(0, n - 1)),
-            pc.not_equal(buck.slice(1), buck.slice(0, n - 1)),
-        ).to_numpy(zero_copy_only=False)
-        return np.concatenate([[0], np.nonzero(neq)[0] + 1]).astype(np.int64)
-
-    def encode_stream(batches):
-        pending: "pa.Table | None" = None
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            if pending is not None:
-                tbl = pa.concat_tables([pending, tbl]).combine_chunks()
-            if len(tbl) == 0:
-                continue
-            starts = group_starts(tbl)
-            last = int(starts[-1])
-            head, pending = tbl.slice(0, last), tbl.slice(last)
-            if len(head):
-                yield from emit_groups(head, starts[:-1])
-        if pending is not None and len(pending):
-            yield from emit_groups(pending, group_starts(pending))
-
-    return tagged.mapInArrow(encode_stream, schema=BLOCKS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -558,8 +396,6 @@ def build_index(
     lang: str | None = "en",
     stem: bool = True,
     cap: int | None = None,
-    postings_per_bucket: int = DEFAULT_POSTINGS_PER_BUCKET,
-    block_size: int = DEFAULT_BLOCK_SIZE,
     partitions: int | None = None,
     from_html: bool = False,
     versioned: bool = False,
@@ -597,8 +433,8 @@ def build_index(
     conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
     try:
         return _build_index_inner(
-            spark, src, out_dir, lang, stem, cap, postings_per_bucket,
-            block_size, parts, from_html, versioned,
+            spark, src, out_dir, lang, stem, cap, parts, from_html,
+            versioned,
         )
     finally:
         if saved_mpb is None:
@@ -608,8 +444,7 @@ def build_index(
 
 
 def _build_index_inner(
-    spark, src, out_dir, lang, stem, cap, postings_per_bucket,
-    block_size, parts, from_html, versioned=False,
+    spark, src, out_dir, lang, stem, cap, parts, from_html, versioned=False,
 ) -> dict:
     # table commits go through the Warehouse abstraction: Iceberg snapshot
     # commits when a catalog is configured, identical parquet layout here
@@ -632,7 +467,7 @@ def _build_index_inner(
     # the text): materialize the tokenized postings ONCE as a scratch
     # parquet table (the natural checkpoint boundary): columnar caching of
     # 10^7+ rows does not scale with cores, a lz4 parquet roundtrip does —
-    # and every downstream consumer (doc stats, term stats, block build)
+    # and every downstream consumer (doc stats, term stats, postings)
     # reads the same snapshot.
     raw_path = os.path.join(out_dir, "_stage", "postings_raw")
     tokenize_postings_from_snapshot(
@@ -661,27 +496,7 @@ def _build_index_inner(
     n_docs = int(stats_row["n_docs"])
     avgdl = float(stats_row["avgdl"] or 0.0)
 
-    # GLOBAL docid backstop + docid-space size. Token-less pages consume a
-    # docid but never reach postings/docs (n_docs excludes them), so the
-    # assigned ID SPACE can exceed n_docs — merge shifts must use the
-    # space, not n_docs, or shifted b-side ids collide with a-side ids.
-    # The same aggregate is the REAL loud backstop for split snapshot
-    # files: per-task _RunningIds cannot see a duplicate produced by
-    # another task, but a global count/distinct/max mismatch can.
-    idrow = id_map.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("docid").alias("nd"),
-        F.max("docid").alias("mx"),
-    ).collect()[0]
-    docid_space = int(idrow["n"])
-    if idrow["nd"] != docid_space or (
-        docid_space and idrow["mx"] + 1 != docid_space
-    ):
-        raise RuntimeError(
-            f"docid assignment corrupt: {docid_space} rows, "
-            f"{idrow['nd']} distinct ids, max {idrow['mx']} "
-            "(snapshot file split across tasks?)"
-        )
+    docid_space = check_docid_space(id_map)
 
     terms = term_stats(postings, n_docs)
     wh.write(
@@ -689,25 +504,13 @@ def _build_index_inner(
         .sortWithinPartitions("term"),
         "terms",
     )
-    terms = wh.read("terms")
-
-    # arrow streaming encoder emits blocks already term-range-partitioned
-    # and term-sorted (one shuffle total) → parquet min/max row-group
-    # pruning works on term lookups with no extra exchange
-    blocks = build_blocks_arrow(
-        postings, terms, n_docs, avgdl,
-        postings_per_bucket=postings_per_bucket, block_size=block_size,
-        partitions=parts,
-    )
-    wh.write(blocks, "postings")
+    wh.write(sorted_postings(postings, parts), "postings")
     stats = {
         "n_docs": n_docs,
         "docid_space": docid_space,
         "avgdl": avgdl,
         "stem": stem,
         "cap": cap,
-        "block_size": block_size,
-        "postings_per_bucket": postings_per_bucket,
         "lang": lang,
     }
     os.makedirs(out_dir, exist_ok=True)

@@ -1,35 +1,22 @@
-"""Index merge — MergeIndexes (T9) at block level.
+"""Index merge — MergeIndexes (T9) over the plain postings table.
 
 Reference semantics (/root/reference/src/cis5550/jobs/MergeIndexes.java:
 45-127): union two indexes built over DISJOINT document sets; same term →
 posting-list union, doc tables concatenated.
 
-Block-level fast path (why the index stores what it stores):
-
 * b-side docids are shifted by a's DOCID SPACE (assigned ids, which can
   exceed n_docs when token-less pages consumed ids without ever reaching
   postings — shifting by n_docs would collide b's low ids with a's high
-  ones). Inside a delta-gap encoded block only the FIRST docid is absolute
-  (gaps are invariant under a constant shift), so shifting a block =
-  re-encoding ONE varint and splicing bytes — no posting decode, no
-  re-sort.
-* block_max is stored idf-FREE (max of the tf/dl-normalized BM25 partial);
-  df changes under merge, so idf changes — but the stored bound doesn't.
-  The query engine multiplies the merged idf at read time, keeping WAND
-  bounds exact after merge with zero recomputation.
-* dl/avgdl: document lengths don't change; merged avgdl is the weighted
-  mean; per-posting normalized partials are computed against avgdl at
-  BUILD time though — so block_max values computed with each side's own
-  avgdl are NOT exact bounds under the merged avgdl. We rescale
-  conservatively: multiplying a-side maxima by ub_scale(avgdl_a→avgdl_m)
-  keeps them valid upper bounds (see ``_bound_scale``); WAND stays exact
-  (bounds only ever loosen).
+  ones). The shift is one column expression, ``docid + shift``; the union
+  then takes the build's own (term, docid) range partitioning and sort
+  (``indexer.sorted_postings``), so the merged table has the same layout
+  as a one-shot build.
+* tf, dl and positions are per-posting facts and do not change. BM25 reads
+  idf and avgdl from the terms table and stats.json at query time, so the
+  merged scores need no per-posting rewrite.
 * term stats: df/cf add; idf recomputed from merged N. One tiny aggregate.
-
-Ordering: merged per-term block order must be "all of a, then all of b"
-(docid-disjoint ranges). We reuse the bucket column: b.bucket is offset by
-a's global max bucket + 1 — cursor order (bucket, block_id) then yields the
-globally docid-sorted posting list.
+* dl/avgdl: document lengths don't change; merged avgdl is the weighted
+  mean.
 """
 
 from __future__ import annotations
@@ -37,44 +24,11 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import SparkSession, functions as F
 
 from search_engine_spark.catalog import Warehouse
-from search_engine_spark.functions.codec import varint_decode, varint_encode
+from search_engine_spark.operators.indexer import sorted_postings
 from search_engine_spark.operators.text_ops import bm25_idf_col
-
-
-def _bound_scale(avgdl_old: float, avgdl_new: float) -> float:
-    """Smallest safe factor c with score_new(tf, dl) ≤ c · score_old(tf, dl)
-    for all tf ≥ 1, dl ≥ 0, where
-    score(tf, dl; a) = tf·(k1+1) / (tf + k1·(1 − b + b·dl/a)).
-
-    The ratio score_new/score_old = D_old/D_new with
-    D(a) = tf + k1(1−b) + k1·b·dl/a. It equals 1 at dl = 0 and increases
-    monotonically in dl toward a_new/a_old, so the supremum is
-    c = max(1, avgdl_new / avgdl_old). Scaling stored (idf-free) block
-    maxima by c keeps them valid WAND upper bounds under the merged avgdl —
-    bounds may loosen, exactness is unaffected."""
-    if avgdl_old <= 0:
-        return 1.0
-    return max(1.0, avgdl_new / avgdl_old)
-
-
-def _shift_block_bytes(blob: bytes, shift: int) -> bytes:
-    """Add ``shift`` to every docid in an encoded block by rewriting only
-    the first-docid varint (gaps are shift-invariant)."""
-    if shift == 0:
-        return blob
-    n, off1 = varint_decode(blob, 0)
-    if n == 0:
-        return blob
-    first, off2 = varint_decode(blob, off1)
-    out = bytearray(blob[:off1])
-    varint_encode(first + shift, out)
-    out += blob[off2:]
-    return bytes(out)
 
 
 def merge_indexes(
@@ -94,42 +48,19 @@ def merge_indexes(
         if n_docs
         else 0.0
     )
-    scale_a = _bound_scale(sa["avgdl"], avgdl)
-    scale_b = _bound_scale(sb["avgdl"], avgdl)
 
     # reads resolve through the Warehouse so versioned (snapshot-manifest)
     # and Iceberg-backed indexes merge too — raw parquet paths would find
     # nothing at a versioned table's root
     wa = Warehouse(spark, a_dir)
     wb = Warehouse(spark, b_dir)
-    pa_ = wa.read("postings")
-    pb = wb.read("postings")
-    max_bucket = pa_.agg(F.max("bucket")).collect()[0][0] or 0
-    bucket_off = int(max_bucket) + 1
-
-    # Arrow-batched (pandas) UDF: one Python call per batch of blocks, not
-    # per block row; _shift_block_bytes itself rewrites ONE varint per block.
-    @pandas_udf("binary")
-    def shift_udf(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda blob: _shift_block_bytes(bytes(blob), shift))
-
-    a_blocks = pa_.withColumn(
-        "block_max", F.col("block_max") * F.lit(scale_a)
-    )
-    b_blocks = (
-        pb.withColumn("bucket", F.col("bucket") + F.lit(bucket_off))
-        .withColumn("first_docid", F.col("first_docid") + F.lit(shift))
-        .withColumn("last_docid", F.col("last_docid") + F.lit(shift))
-        .withColumn("block_max", F.col("block_max") * F.lit(scale_b))
-        .withColumn("block", shift_udf("block"))
-    )
     parts = spark.sparkContext.defaultParallelism
-    merged = a_blocks.unionByName(b_blocks)
-    (
-        merged.repartitionByRange(parts, "term")
-        .sortWithinPartitions("term", "bucket", "block_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings"))
+    b_postings = wb.read("postings").withColumn(
+        "docid", F.col("docid") + F.lit(shift)
+    )
+    merged = wa.read("postings").unionByName(b_postings)
+    sorted_postings(merged, parts).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "postings")
     )
 
     ta = wa.read("terms")

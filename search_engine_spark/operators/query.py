@@ -1,39 +1,41 @@
-"""Query-side engine: BM25 top-k over the block index.
+"""Query-side engine: BM25 top-k and phrase search over the postings table.
+
+The postings table is plain columns, ``(term, docid, tf, dl, positions)``
+sorted by (term, docid) (see operators/indexer.py). The parquet scan
+decodes it; no query path runs Python over posting data.
 
 One exact scorer per execution site (no posting-list sampling — the
 reference randomly sampled 2000 docs per term, frontend/Master.java:356-391;
 the north star replaces that with exact BM25):
 
-* ``topk_distributed`` — a declarative Spark plan: partition-pruned scan of
-  the postings table for the query's terms, block decode inside
-  ``mapInPandas`` (Arrow-batched), per-(doc,term) BM25 partials, then
+* ``topk_distributed`` — a declarative Spark plan: term-pruned scan of
+  ``(term, docid, tf, dl)``, broadcast idf join, per-(doc,term) BM25
+  partials as JVM expressions (``_bm25_part_col``), then
   ``groupBy(docid).sum → ORDER BY score DESC LIMIT k``
-  (TakeOrderedAndProject). Scales with the cluster; ``topk_batch`` is its
-  many-queries-per-job form.
+  (TakeOrderedAndProject). Scales with the cluster; ``topk_batch``,
+  ``topk_with_deletes`` and ``topk_over_segments`` are its batch,
+  tombstone and segment-set forms.
 
-* ``topk_wand`` — driver-side, for interactive queries: one partition-
-  pruned collect of the query terms' posting blocks, then vectorized
-  (numpy, array-at-a-time) exact BM25 scoring. Queries whose posting
-  lists are too large for the driver hand off to ``topk_distributed``.
+* ``topk_wand`` — driver-side, for interactive queries: one term-pruned
+  Arrow collect of the query terms' postings, then vectorized (numpy,
+  array-at-a-time) exact BM25 scoring. Queries whose posting lists are
+  too large for the driver hand off to ``topk_distributed``.
 
 Phrase search (reference jobs/IndexerProjectPhraseSearch.java:328-475)
 intersects posting lists in df-ascending order and verifies adjacency with
-the stored positions via a two-pointer offset merge.
+the stored positions by intersecting candidate phrase-start sets.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from search_engine_spark.catalog import Warehouse
-from search_engine_spark.functions.codec import decode_block_np
 from search_engine_spark.oracle.bm25 import B, K1
 from search_engine_spark.oracle.text import STOPWORDS, tokenize
 
@@ -102,26 +104,13 @@ def parse_query(query: str, stem: bool = True) -> list[str]:
 # Distributed exact top-k
 # ---------------------------------------------------------------------------
 
-def _decode_rows_idf(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """(block, idf) batches → (docid, tf, dl, idf) posting rows."""
-    for pdf in batches:
-        d_l, t_l, l_l, i_l = [], [], [], []
-        for blob, idf in zip(pdf["block"], pdf["idf"]):
-            d, t, dl = decode_block_np(bytes(blob))
-            d_l.append(d)
-            t_l.append(t)
-            l_l.append(dl)
-            i_l.append(np.full(len(d), float(idf)))
-        if not d_l:
-            continue
-        yield pd.DataFrame(
-            {"docid": np.concatenate(d_l),
-             "tf": np.concatenate(t_l),
-             "dl": np.concatenate(l_l),
-             "idf": np.concatenate(i_l)}
-        )
+def _scoring_postings(index: Index, terms: list[str]) -> DataFrame:
+    """(term, docid, tf, dl) rows of ``terms`` — the term filter is pushed
+    into the parquet scan (row-group pruning on the term-sorted layout) and
+    ``positions`` is never read."""
+    return index.postings.filter(F.col("term").isin(terms)).select(
+        "term", "docid", "tf", "dl"
+    )
 
 
 def _bm25_part_col(avgdl: float):
@@ -152,20 +141,16 @@ def topk_distributed(
         return spark.createDataFrame([], "docid long, score double")
     avgdl = index.stats["avgdl"]
 
-    blocks = index.postings.filter(F.col("term").isin(terms))
     tstats = index.terms.filter(F.col("term").isin(terms)).select("term", "idf")
 
-    withidf = blocks.join(F.broadcast(tstats), "term")
-
-    # decode blocks → (docid, tf, dl, idf) rows → exact BM25 partial → sum
-    # per doc. dl is colocated in the block (codec v3), so the query plan
-    # needs NO join against the docs table — at 10^12 docs that join was a
-    # postings-sized shuffle; now the only shuffle is the final groupBy.
-    decoded = withidf.select("block", "idf").mapInPandas(
-        _decode_rows_idf, schema="docid long, tf long, dl long, idf double"
-    )
+    # exact BM25 partial per posting → sum per doc. dl rides on every
+    # posting row, so the query plan needs NO join against the docs table —
+    # at 10^12 docs that join was a postings-sized shuffle; the only
+    # shuffle is the final groupBy.
     scored = (
-        decoded.withColumn("part", _bm25_part_col(avgdl))
+        _scoring_postings(index, terms)
+        .join(F.broadcast(tstats), "term")
+        .withColumn("part", _bm25_part_col(avgdl))
         .groupBy("docid")
         .agg(F.round(F.sum("part"), decimals).alias("score"))
     )
@@ -190,7 +175,7 @@ def topk_with_deletes(
     (streaming/indexing.py) and ``crawl_delta``: added/changed pages →
     new segment; removed/changed pages → tombstones; segments compact on
     the indexer's own merge schedule. Cost over a plain query: one
-    anti-join of the decoded QUERY-TERM postings against the tombstone
+    anti-join of the QUERY-TERM postings against the tombstone
     set (never the full index) + one scalar stats adjustment (count and
     dl-sum of tombstoned docs, a pruned broadcast-sized aggregate); the
     postings/terms tables are untouched. Per-term idf is recomputed from
@@ -226,13 +211,8 @@ def topk_with_deletes(
     )
     avgdl_live = sum_dl_live / n_live
 
-    blocks = index.postings.filter(F.col("term").isin(terms)).select(
-        "term", "block", F.lit(0.0).alias("idf")  # idf joined post-mask
-    )
-    live = blocks.mapInPandas(
-        _decode_rows_idf_term,
-        schema="term string, docid long, tf long, dl long, idf double",
-    ).drop("idf").join(dele, "docid", "left_anti")
+    # idf is joined after the mask: it depends on the LIVE df
+    live = _scoring_postings(index, terms).join(dele, "docid", "left_anti")
     df_live = live.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tstats = df_live.select(
         "term", bm25_idf_col(n_live, F.col("df")).alias("idf")
@@ -244,31 +224,6 @@ def topk_with_deletes(
         .agg(F.round(F.sum("part"), decimals).alias("score"))
     )
     return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-
-
-def _decode_rows_idf_term(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """(term, block, idf) batches → (term, docid, tf, dl, idf) rows —
-    the term column rides along for per-term aggregation downstream."""
-    for pdf in batches:
-        t_out, d_l, t_l, l_l, i_l = [], [], [], [], []
-        for term, blob, idf in zip(pdf["term"], pdf["block"], pdf["idf"]):
-            d, t, dl = decode_block_np(bytes(blob))
-            d_l.append(d)
-            t_l.append(t)
-            l_l.append(dl)
-            i_l.append(np.full(len(d), float(idf)))
-            t_out.append(np.full(len(d), term, dtype=object))
-        if not d_l:
-            continue
-        yield pd.DataFrame(
-            {"term": np.concatenate(t_out),
-             "docid": np.concatenate(d_l),
-             "tf": np.concatenate(t_l),
-             "dl": np.concatenate(l_l),
-             "idf": np.concatenate(i_l)}
-        )
 
 
 def topk_over_segments(
@@ -283,10 +238,10 @@ def topk_over_segments(
     that order, matching what a collapse via merge_indexes would assign).
     Global n_docs/avgdl come from segment stats; global per-term df is the
     sum over the segments' terms tables (pruned, tiny scans) → global idf
-    driver-side. Each segment's pruned postings decode with the GLOBAL
-    idf/avgdl and docids shift by the segment offset; one union + one
-    groupBy scores everything. Result is identical to querying the
-    collapsed index (tested to 1e-9)."""
+    driver-side. Each segment's pruned postings shift their docids by the
+    segment offset; one union, one broadcast idf join and one groupBy
+    score everything with the GLOBAL idf/avgdl. Result is identical to
+    querying the collapsed index (tested to 1e-9)."""
     from search_engine_spark.oracle.bm25 import bm25_idf
 
     idxs = [load_index(spark, d) for d in seg_dirs]
@@ -318,21 +273,18 @@ def topk_over_segments(
     offset = 0
     parts = []
     for ix in idxs:
-        blocks = ix.postings.filter(
-            F.col("term").isin(list(df_global))
-        ).join(tstats, "term")
-        decoded = blocks.select("block", "idf").mapInPandas(
-            _decode_rows_idf, schema="docid long, tf long, dl long, idf double"
-        )
         parts.append(
-            decoded.withColumn("docid", F.col("docid") + F.lit(offset))
+            _scoring_postings(ix, list(df_global)).withColumn(
+                "docid", F.col("docid") + F.lit(offset)
+            )
         )
         offset += ix.stats["n_docs"]
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
     scored = (
-        union.withColumn("part", _bm25_part_col(avgdl))
+        union.join(tstats, "term")
+        .withColumn("part", _bm25_part_col(avgdl))
         .groupBy("docid")
         .agg(F.round(F.sum("part"), SCORE_ROUND).alias("score"))
     )
@@ -346,7 +298,7 @@ def topk_batch(
     """(qid, docid, score, rank) — top-k for MANY queries in ONE Spark plan.
 
     Bulk query evaluation: the postings scan is pruned to the UNION of all
-    queries' terms and decoded once; a broadcast (term → qid) expansion
+    queries' terms and read once; a broadcast (term → qid) expansion
     fans each posting out to the queries that contain its term; one
     aggregation scores every (qid, docid); a per-qid window takes top-k.
     Thousands of queries amortize into a single pass over the index — the
@@ -369,35 +321,11 @@ def topk_batch(
     tstats = index.terms.filter(F.col("term").isin(all_terms)).select(
         "term", "idf"
     )
-    blocks = index.postings.filter(F.col("term").isin(all_terms)).select(
-        "term", "block"
-    )
-
-    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_l, d_l, f_l, l_l = [], [], [], []
-            for term, blob in zip(pdf["term"], pdf["block"]):
-                d, t, dl = decode_block_np(bytes(blob))
-                t_l.extend([term] * len(d))
-                d_l.append(d)
-                f_l.append(t)
-                l_l.append(dl)
-            if not d_l:
-                continue
-            yield pd.DataFrame(
-                {"term": pd.Series(t_l, dtype="object"),
-                 "docid": np.concatenate(d_l),
-                 "tf": np.concatenate(f_l),
-                 "dl": np.concatenate(l_l)}
-            )
-
-    decoded = blocks.mapInPandas(
-        decode_rows, schema="term string, docid long, tf long, dl long"
-    )
     from pyspark.sql import Window
 
     scored = (
-        decoded.join(F.broadcast(tstats), "term")
+        _scoring_postings(index, all_terms)
+        .join(F.broadcast(tstats), "term")
         .join(F.broadcast(qmap), "term")
         .withColumn("part", _bm25_part_col(avgdl))
         .groupBy("qid", "docid")
@@ -421,50 +349,32 @@ def topk_batch(
 # Driver-side exact top-k
 # ---------------------------------------------------------------------------
 
-def _fetch_term_blocks(index: Index, terms: list[str]) -> dict[str, list[bytes]]:
-    """Collect the (bucket, block_id)-ordered block bytes per term.
-    One partition-pruned scan for all query terms."""
-    rows = (
-        index.postings.filter(F.col("term").isin(terms))
-        .select("term", "bucket", "block_id", "block")
-        .collect()
-    )
-    out: dict[str, list[tuple]] = {}
-    for r in rows:
-        out.setdefault(r["term"], []).append(
-            (r["bucket"], r["block_id"], bytes(r["block"]))
-        )
-    return {t: [b for _bk, _bi, b in sorted(blks)] for t, blks in out.items()}
+def _fetch_postings(index: Index, terms: list[str]):
+    """The query terms' (term, docid, tf, dl) rows as one Arrow table —
+    one term-pruned scan, collected column-wise (no per-row objects)."""
+    return _scoring_postings(index, terms).toArrow()
 
 
 def _topk_bulk(
-    blocks: dict[str, list[bytes]],
+    postings,
     idfs: dict[str, float],
     avgdl: float,
     k: int,
 ) -> list[tuple[int, float]]:
-    """Vectorized exhaustive scoring of the fetched blocks (numpy): decode
-    every block, compute BM25 partials array-at-a-time, sum per docid via
-    sorted reduceat, partial-select top-k. Exact."""
-    d_l, p_l = [], []
-    for t, blks in blocks.items():
-        idf = idfs[t]
-        for blob in blks:
-            d, tf, dl = decode_block_np(blob)
-            if not len(d):
-                continue
-            tf = tf.astype(np.float64)
-            part = (
-                idf * tf * (K1 + 1.0)
-                / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-            )
-            d_l.append(d)
-            p_l.append(part)
-    if not d_l:
+    """Vectorized exhaustive scoring of the fetched postings (numpy):
+    BM25 partials array-at-a-time, sum per docid via sorted reduceat,
+    partial-select top-k. Exact."""
+    if not postings.num_rows:
         return []
-    docids = np.concatenate(d_l)
-    parts = np.concatenate(p_l)
-    order = np.argsort(docids, kind="stable")  # stable: per-doc term order
+    term = postings.column("term").combine_chunks().dictionary_encode()
+    idf = np.array(
+        [idfs[t] for t in term.dictionary.to_pylist()], dtype=np.float64
+    )[term.indices.to_numpy()]
+    docids = postings.column("docid").to_numpy()
+    tf = postings.column("tf").to_numpy().astype(np.float64)
+    dl = postings.column("dl").to_numpy().astype(np.float64)
+    parts = idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    order = np.argsort(docids, kind="stable")
     d_s, p_s = docids[order], parts[order]
     starts = np.nonzero(np.concatenate(([True], d_s[1:] != d_s[:-1])))[0]
     uniq = d_s[starts]
@@ -474,12 +384,11 @@ def _topk_bulk(
 
 
 # Driver-side serving paths (``topk_wand``, ``phrase_docs``) collect
-# posting-block BYTES to the driver. Above this many postings for one
-# query they hand off to their distributed siblings instead — a stop-word
-# term over a 100× corpus must never OOM the driver. The preflight is
-# FREE for topk_wand (df rides along in the terms lookup it already does)
-# and metadata-only for phrase_docs. 2M postings ≈ low tens of MB of
-# block bytes with positions — comfortable; far past it is not.
+# posting rows to the driver. Above this many postings for one query they
+# hand off to their distributed siblings instead — a stop-word term over a
+# 100× corpus must never OOM the driver. The preflight is the terms lookup
+# (df) each path already does. 2M postings ≈ a few tens of MB of Arrow
+# columns (more with positions) — comfortable; far past it is not.
 DRIVER_POSTINGS_MAX = 2_000_000
 
 
@@ -490,20 +399,20 @@ def topk_wand(
     driver_postings_max: int | None = None,
 ) -> list[tuple[int, float]]:
     """Exact BM25 top-k, driver-side (the interactive path): one
-    partition-pruned collect of the query terms' posting blocks, then
+    term-pruned Arrow collect of the query terms' postings, then
     vectorized exhaustive scoring (``_topk_bulk``). Returns
     [(docid, score)] sorted (score desc, docid asc), identical to the
     exhaustive oracle. The name predates this scorer and is kept for its
     callers.
 
-    Document lengths come from the posting blocks themselves (codec v3),
-    so the query path touches ONLY the pruned postings + terms for the
+    Document lengths ride on the posting rows themselves, so the query
+    path touches ONLY the pruned postings + terms for the
     query — never the docs table (collecting it was O(corpus) per fresh
     index handle; fatal at 10^12 docs).
 
     Driver-memory guard: the terms lookup below also reads ``df``, and
     when the query's total posting count exceeds ``driver_postings_max``
-    (default :data:`DRIVER_POSTINGS_MAX`) the block bytes are NEVER
+    (default :data:`DRIVER_POSTINGS_MAX`) the postings are NEVER
     collected — the call hands off to ``topk_distributed`` and returns
     its (rank- and score-identical) result. The preflight costs zero
     extra Spark jobs."""
@@ -521,8 +430,8 @@ def topk_wand(
     if sum(r["df"] for r in trows) > driver_postings_max:
         rows = topk_distributed(index, query, k).collect()
         return [(int(r["docid"]), float(r["score"])) for r in rows]
-    blocks = _fetch_term_blocks(index, [t for t in terms if t in idfs])
-    return _topk_bulk(blocks, idfs, index.stats["avgdl"], k)
+    postings = _fetch_postings(index, [t for t in terms if t in idfs])
+    return _topk_bulk(postings, idfs, index.stats["avgdl"], k)
 
 
 # ---------------------------------------------------------------------------
@@ -659,35 +568,28 @@ def phrase_docs(
     """Docids containing the exact adjacent token phrase — driver path.
 
     Scale shape (reference IndexerProjectPhraseSearch.java:407-440's
-    df-ascending idea, applied at BLOCK level): fetch block METADATA only
-    (no bytes), process terms df-ascending, decode the rarest term fully,
-    and for every later term fetch + decode ONLY the blocks whose
-    [first_docid, last_docid] range intersects a surviving candidate —
-    a phrase containing a frequent term no longer pulls that term's whole
-    posting list to the driver. Adjacency is verified from the stored
+    df-ascending idea): one terms lookup gives each phrase term's df; then
+    ONE collect of the phrase terms' (term, docid, positions) rows,
+    semi-joined to the rarest term's docids — a phrase containing a
+    frequent term never pulls that term's whole posting list to the
+    driver, only its rows in the rarest term's documents. Terms are then
+    processed df-ascending and adjacency is verified from the stored
     1-based positions (checkExactMatch :340-376) via candidate-start-set
     intersection; duplicate phrase terms intersect across their offsets."""
     offs = _phrase_term_offsets(phrase)
     if not offs:
         return []
-    meta_rows = (
-        index.postings.filter(F.col("term").isin(list(offs)))
-        .select("term", "bucket", "block_id", "first_docid", "last_docid", "n")
+    df_by_term = {
+        r["term"]: r["df"]
+        for r in index.terms.filter(F.col("term").isin(list(offs)))
+        .select("term", "df")
         .collect()
-    )
-    meta: dict[str, list[tuple]] = {}
-    df_by_term: dict[str, int] = {}
-    for r in meta_rows:
-        meta.setdefault(r["term"], []).append(
-            (r["bucket"], r["block_id"], r["first_docid"], r["last_docid"])
-        )
-        df_by_term[r["term"]] = df_by_term.get(r["term"], 0) + r["n"]
-    if any(t not in meta for t in offs):
+    }
+    if any(t not in df_by_term for t in offs):
         return []
     order = sorted(offs, key=lambda t: df_by_term[t])
-    # Driver-memory guard (metadata-only preflight — no bytes read yet):
-    # the rarest term is decoded IN FULL on the driver and bounds the
-    # candidate set every later fetch is keyed by. Past the threshold,
+    # Driver-memory guard: the rarest term's df bounds the candidate set
+    # and so every term's share of the collect below. Past the threshold,
     # hand off to the fully distributed plan — identical result set.
     if driver_postings_max is None:
         driver_postings_max = DRIVER_POSTINGS_MAX
@@ -697,57 +599,36 @@ def phrase_docs(
             for r in phrase_docs_distributed(index, phrase).collect()
         )
 
-    def fetch_blocks(term: str, keys: set[tuple[int, int]] | None):
-        q = index.postings.filter(F.col("term") == term)
-        if keys is not None:
-            # bucket/block_id are both int32; pack into one bigint key so
-            # the pushdown is a single IN filter
-            packed = [b * (1 << 32) + i for (b, i) in keys]
-            q = q.filter(
-                (F.col("bucket").cast("long") * F.lit(1 << 32)
-                 + F.col("block_id")).isin(packed)
-            )
-        return q.select("bucket", "block_id", "block").collect()
+    postings = index.postings.filter(F.col("term").isin(list(offs))).select(
+        "term", "docid", "positions"
+    )
+    rarest = postings.filter(F.col("term") == order[0]).select("docid")
+    rows = postings.join(rarest, "docid", "left_semi").toArrow()
+    by_term: dict[str, list[tuple[int, list[int]]]] = {}
+    for t, d, plist in zip(
+        rows.column("term").to_pylist(),
+        rows.column("docid").to_pylist(),
+        rows.column("positions").to_pylist(),
+    ):
+        by_term.setdefault(t, []).append((d, plist))
 
     # starts[docid] = set of phrase-start positions consistent with every
     # term processed so far
     starts: dict[int, set[int]] = {}
     for ti, t in enumerate(order):
-        if ti == 0:
-            rows = fetch_blocks(t, None)
-        else:
-            cand = sorted(starts)
-            if not cand:
-                return []
-            import bisect
-
-            need: set[tuple[int, int]] = set()
-            for bk, bi, fd, ld in meta[t]:
-                j = bisect.bisect_left(cand, fd)
-                if j < len(cand) and cand[j] <= ld:
-                    need.add((bk, bi))
-            if not need:
-                return []
-            rows = fetch_blocks(t, need)
         term_starts: dict[int, set[int]] = {}
-        for r in rows:
-            ds, _tfs, _dls, plens, pflat = decode_block_np(
-                bytes(r["block"]), positions=True
-            )
-            bounds = np.concatenate(([0], np.cumsum(plens)))
-            for j in range(len(ds)):
-                d = int(ds[j])
-                if ti > 0 and d not in starts:
-                    continue
-                pset = set(pflat[bounds[j] : bounds[j + 1]].tolist())
-                s: set[int] | None = None
-                for o in offs[t]:
-                    cur = {p - o for p in pset if p - o >= 1}
-                    s = cur if s is None else (s & cur)
-                    if not s:
-                        break
-                if s:
-                    term_starts[d] = s
+        for d, plist in by_term.get(t, ()):
+            if ti > 0 and d not in starts:
+                continue
+            pset = set(plist)
+            s: set[int] | None = None
+            for o in offs[t]:
+                cur = {p - o for p in pset if p - o >= 1}
+                s = cur if s is None else (s & cur)
+                if not s:
+                    break
+            if s:
+                term_starts[d] = s
         if ti == 0:
             starts = term_starts
         else:
@@ -765,50 +646,22 @@ def phrase_docs(
 def phrase_docs_distributed(index: Index, phrase: str) -> DataFrame:
     """Phrase search as a fully distributed Spark plan (the 10^12-doc path).
 
-    Partition-pruned scan of the phrase terms' blocks → Arrow-batched
-    decode to (term, docid, pos) → one (docid, start)-keyed join per
-    phrase offset (start = pos - offset) → DISTINCT docid. Shuffle sizes
-    are the terms' posting lists; nothing touches the driver."""
+    Per phrase offset, a term-pruned scan of that term's postings explodes
+    ``positions`` to (docid, start = pos - offset); one (docid, start)-keyed
+    join per further offset → DISTINCT docid. Shuffle sizes are the terms'
+    posting lists; nothing touches the driver."""
     offs = _phrase_term_offsets(phrase)
     spark = index.spark
     if not offs:
         return spark.createDataFrame([], "docid long")
-    uniq = list(offs)
-
-    def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_l, d_l, p_l = [], [], []
-            for term, blob in zip(pdf["term"], pdf["block"]):
-                ds, _tfs, _dls, plens, pflat = decode_block_np(
-                    bytes(blob), positions=True
-                )
-                t_l.extend([term] * len(pflat))
-                d_l.append(np.repeat(ds, plens))
-                p_l.append(pflat)
-            if not d_l:
-                continue
-            yield pd.DataFrame(
-                {"term": pd.Series(t_l, dtype="object"),
-                 "docid": np.concatenate(d_l),
-                 "pos": np.concatenate(p_l)}
-            )
-
-    decoded = (
-        index.postings.filter(F.col("term").isin(uniq))
-        .select("term", "block")
-        .mapInPandas(decode_pos, schema="term string, docid long, pos long")
-        # materialize ONCE: every phrase-offset leg below filters this
-        # relation, and without a boundary each join branch re-runs the
-        # pruned scan + Arrow position decode (an n-token phrase decoded
-        # the union of posting lists n times)
-        .localCheckpoint(eager=False)
-    )
     legs = []
     for t, t_offs in offs.items():
+        occ = index.postings.filter(F.col("term") == t).select(
+            "docid", F.explode("positions").alias("pos")
+        )
         for o in t_offs:
             legs.append(
-                decoded.filter(F.col("term") == t)
-                .select("docid", (F.col("pos") - F.lit(o)).alias("start"))
+                occ.select("docid", (F.col("pos") - F.lit(o)).alias("start"))
                 .filter(F.col("start") >= 1)
             )
     out = legs[0]

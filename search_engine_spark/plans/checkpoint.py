@@ -35,13 +35,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from search_engine_spark.operators.indexer import (
-    DEFAULT_POSTINGS_PER_BUCKET,
     assign_docids,
-    build_blocks_arrow,
+    check_docid_space,
+    sorted_postings,
     term_stats,
     tokenize_postings,
 )
-from search_engine_spark.functions.codec import DEFAULT_BLOCK_SIZE
 
 LINEAGE_SCHEMA = (
     "chunk_id int, stage string, status string, rows long, wall_ms long, "
@@ -84,8 +83,6 @@ def resumable_build(
     lang: str | None = "en",
     stem: bool = True,
     cap: int | None = None,
-    postings_per_bucket: int = DEFAULT_POSTINGS_PER_BUCKET,
-    block_size: int = DEFAULT_BLOCK_SIZE,
     fail_after_chunk: int | None = None,
 ) -> dict:
     """Chunked, restartable index build. ``fail_after_chunk`` injects a
@@ -94,7 +91,9 @@ def resumable_build(
     src = pages.filter(F.col("lang") == lang) if lang else pages
     docs = assign_docids(src.select("url", "text"), partitions=n_chunks)
     docs.persist()
-    n_total = docs.count()
+    # the global docid check runs before any chunk commits: a duplicate id
+    # would otherwise land in two postings rows of one term
+    n_total = check_docid_space(docs)
     # the fingerprint covers the chunk LAYOUT too: a lineage row from a run
     # with a different n_chunks describes different docid ranges and must
     # not mark this run's chunks as done
@@ -172,12 +171,9 @@ def resumable_build(
     n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"] or 0.0)
     terms = term_stats(postings, n_docs)
     parts = spark.sparkContext.defaultParallelism
-    blocks = build_blocks_arrow(
-        postings, terms, n_docs, avgdl,
-        postings_per_bucket=postings_per_bucket, block_size=block_size,
-        partitions=parts,
+    sorted_postings(postings, parts).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "postings")
     )
-    blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
     terms.repartitionByRange(max(1, parts // 4), "term").sortWithinPartitions(
         "term"
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
@@ -187,11 +183,10 @@ def resumable_build(
 
     stats = {
         "n_docs": n_docs,
+        "docid_space": n_total,
         "avgdl": avgdl,
         "stem": stem,
         "cap": cap,
-        "block_size": block_size,
-        "postings_per_bucket": postings_per_bucket,
         "lang": lang,
         "n_chunks": n_chunks,
         "input_fingerprint": fp,

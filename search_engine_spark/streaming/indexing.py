@@ -11,7 +11,7 @@ searchable without rebuilding the world. This module adds that surface:
   DataFrame — the identical code path as the batch build).
 * Chunks fold into a logarithmic merge tree (Lucene-style): a chunk
   enters at level 0; whenever a level is already occupied, the two
-  indexes merge (``merge_indexes``, block-level — no posting decode)
+  indexes merge (``merge_indexes``: shift b's docids, union, re-sort)
   into the next level. Per-doc write amplification is O(log n_batches)
   instead of O(n_batches) for naive "merge every batch into serving".
 * The level set persists to ``LEVELS`` (write-then-rename, atomic) after

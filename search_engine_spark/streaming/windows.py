@@ -10,7 +10,7 @@ Structured Streaming so the SAME transformations run incrementally:
 * ``streaming_postings`` — the indexer's tokenize stage as a streaming
   transform (mapInPandas works unchanged on streams): each micro-batch
   appends (docid, term, tf, positions, dl) rows; a downstream batch job
-  folds them into posting blocks (index refresh).
+  folds them into the postings table (index refresh).
 * ``windowed_event_counts`` — tumbling event-time window aggregation with
   a watermark (late data dropped after the threshold).
 * ``session_windows`` — gap-based session aggregation via the built-in

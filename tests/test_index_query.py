@@ -1,12 +1,12 @@
 """End-to-end index build + query parity vs the pure-Python oracle.
 
-Builds the block index over the deterministic synthetic corpus and requires:
+Builds the index over the deterministic synthetic corpus and requires:
 - identical doc stats (n_docs, dl per doc, avgdl)
 - rank-identical BM25 top-k (docids) with scores equal to 1e-9, for BOTH
   the distributed Spark plan and the driver-side vectorized scorer
 - identical phrase-search doc sets
-- skew-bucketing invariance: tiny bucket size (forces heavy-term splits)
-  produces identical results to the unbucketed build
+- skew invariance: a build whose postings ranges are smaller than a head
+  term's posting list splits that list across files with identical results
 """
 
 from __future__ import annotations
@@ -120,14 +120,14 @@ def test_topk_wand_small_k_exact(index, oracle):
 
 def test_topk_wand_driver_guard_falls_back(index, oracle, monkeypatch):
     """Above ``driver_postings_max`` the interactive path must NEVER
-    collect block bytes — it hands off to topk_distributed with an
-    identical result. _fetch_term_blocks is poisoned to prove the bytes
+    collect postings — it hands off to topk_distributed with an
+    identical result. _fetch_postings is poisoned to prove the postings
     collect does not run when the guard fires."""
     q = "bloodthirsty soldier"
     want = Q.topk_wand(index, q, k=25)  # normal path (under the threshold)
     monkeypatch.setattr(
-        Q, "_fetch_term_blocks",
-        lambda *a, **k: pytest.fail("guard did not fire: bytes collected"),
+        Q, "_fetch_postings",
+        lambda *a, **k: pytest.fail("guard did not fire: postings collected"),
     )
     handoffs = []
     plain = Q.topk_distributed
@@ -189,7 +189,7 @@ def test_phrase_distributed_matches_oracle(index, oracle, ph):
 
 def test_phrase_with_frequent_term(index, oracle, corpus):
     """Phrases containing a stopword-frequency term: the driver path must
-    prune that term's blocks to candidate ranges (not pull its whole
+    restrict that term's rows to the rarest term's docs (not pull its whole
     posting list) and still return the exact doc set."""
     from collections import Counter
 
@@ -215,25 +215,29 @@ def test_phrase_with_frequent_term(index, oracle, corpus):
 
 
 def test_skew_bucketing_invariance(spark, tmp_path_factory, oracle):
-    """Tiny postings_per_bucket forces every frequent term through the
-    docid-range bucket path; results must be identical (north_rule: skew
-    handled explicitly, provably result-preserving)."""
-    out = str(tmp_path_factory.mktemp("idx") / "bucketed")
-    pages = gen_pages_df(spark, N_DOCS, partitions=4)
-    build_index(
-        pages, out, lang="en", stem=True, partitions=4,
-        postings_per_bucket=20, block_size=16,
-    )
-    idx = Q.load_index(spark, out)
-    # heavy terms really did split into multiple buckets
+    """Skew handling: the postings shuffle range-partitions on
+    (term, docid), so a head term's list is cut by docid range across
+    tasks. The 300-page corpus has 167,549 postings rows and a top df of
+    296; at 640 partitions a range averages ~262 rows, fewer than that df,
+    so the top term's rows must land in more than one postings file — and
+    results stay oracle-identical (north_rule: skew handled explicitly,
+    provably result-preserving)."""
     from pyspark.sql import functions as F
-    nbuckets = (
-        idx.postings.groupBy("term")
-        .agg(F.countDistinct("bucket").alias("nb"))
-        .agg(F.max("nb"))
-        .collect()[0][0]
+
+    parts = 640
+    out = str(tmp_path_factory.mktemp("idx") / "split")
+    pages = gen_pages_df(spark, N_DOCS, partitions=4)
+    build_index(pages, out, lang="en", stem=True, partitions=parts)
+    idx = Q.load_index(spark, out)
+    top = idx.terms.orderBy(F.desc("df"), "term").first()
+    assert idx.postings.count() / parts < top["df"]
+    n_files = (
+        idx.postings.filter(F.col("term") == top["term"])
+        .select(F.input_file_name())
+        .distinct()
+        .count()
     )
-    assert nbuckets > 1
+    assert n_files > 1
     for q in ("gentlemen", "prince andrew", "historic event"):
         got = Q.topk_wand(idx, q, k=30)
         want = oracle.topk(q, k=30)

@@ -1,18 +1,9 @@
 """Unit tests for the pinned pure-Python oracle: Porter stemmer, extractor,
-tokenizer, posting codec, BM25 engine."""
+tokenizer, BM25 engine."""
 
 from __future__ import annotations
 
-import pytest
 
-from search_engine_spark.functions.codec import (
-    decode_block,
-    decode_block_docids,
-    encode_block,
-    split_blocks,
-    varint_decode,
-    varint_encode,
-)
 from search_engine_spark.oracle import (
     OracleIndex,
     extract_text,
@@ -93,54 +84,6 @@ def test_tokenize_cap():
     text = " ".join(f"w{i}" for i in range(2000))
     toks = tokenize(text, stem=False)
     assert max(p for _, p in toks) == 1500
-
-
-def test_varint_roundtrip():
-    out = bytearray()
-    vals = [0, 1, 127, 128, 300, 2**20, 2**35, 2**63 - 1]
-    for v in vals:
-        varint_encode(v, out)
-    buf = bytes(out)
-    off = 0
-    got = []
-    for _ in vals:
-        v, off = varint_decode(buf, off)
-        got.append(v)
-    assert got == vals and off == len(buf)
-
-
-def test_block_roundtrip():
-    docids = [3, 7, 8, 100, 10_000_000]
-    tfs = [1, 5, 2, 9, 1]
-    dls = [10, 220, 1500, 7, 99]
-    poss = [[1], [2, 9, 40], [], [7, 8], [1500]]
-    blk = encode_block(docids, tfs, poss, dls)
-    assert decode_block(blk) == (docids, tfs, dls, poss)
-    assert decode_block_docids(blk) == docids
-
-
-def test_block_rejects_unsorted():
-    with pytest.raises(ValueError):
-        encode_block([5, 5], [1, 1], None)
-
-
-def test_split_blocks_and_blockmax():
-    docids = list(range(0, 1000, 3))
-    tfs = [(d % 7) + 1 for d in docids]
-    doclen = {d: 100 + (d % 50) for d in docids}
-    blocks = list(
-        split_blocks(docids, tfs, None, doclen, 120.0, 1.5, block_size=128)
-    )
-    assert sum(b[5] for b in blocks) == len(docids)
-    # reassemble
-    got = []
-    for _bi, blk, bmax, first, last, _n in blocks:
-        ds, ts, dls, _ps = decode_block(blk)
-        assert ds[0] == first and ds[-1] == last
-        assert dls == [doclen[d] for d in ds]  # dl colocated in the block
-        assert bmax > 0.0
-        got.extend(ds)
-    assert got == docids
 
 
 def test_oracle_bm25_basic():

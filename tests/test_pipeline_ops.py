@@ -1706,6 +1706,33 @@ def test_mmr_rerank_matches_python_mirror(spark):
     assert got == want
 
 
+def test_mmr_rerank_sql_reads_every_dimension():
+    """The DuckDB mirror takes each embedding's own length: on 80-dim
+    vectors it must equal the Python mirror (a fixed 64-dim series
+    dropped the last 16 dimensions from every cosine)."""
+    import random
+
+    import duckdb
+
+    rng = random.Random(11)
+    vecs = {
+        i: [round(rng.uniform(-1, 1), 3) for _ in range(80)]
+        for i in range(30)
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", list(vecs.items()))
+    got = sorted(
+        tuple(r)
+        for r in con.execute(S.mmr_rerank_sql(qid=0, k=4, pool=10)).fetchall()
+    )
+    want = sorted(_py_mmr(
+        {i: v for i, v in vecs.items() if i != 0}, vecs[0], k=4, pool=10,
+        lam=0.7,
+    ))
+    assert got == want
+
+
 def test_mmr_penalizes_redundancy(spark):
     """Two near-identical top candidates + one diverse lower-relevance
     one: plain cosine top-2 keeps the clones; MMR at lambda .5 swaps the

@@ -1,8 +1,7 @@
 """Hypothesis property tests for the pure-Python substrate the engine's
-distributed operators are built on: the posting-block codec (and the merge
-shift-splice invariant), the vectorized decoder, and the md5 hash family's
-three-way parity (Spark SQL expr / DuckDB SQL / Python oracle all derive
-the same integers — what makes LSH/MinHash/sampling oracle-checkable)."""
+distributed operators are built on: the md5 hash family's three-way
+parity (Spark SQL expr / DuckDB SQL / Python oracle all derive the same
+integers — what makes LSH/MinHash/sampling oracle-checkable)."""
 
 from __future__ import annotations
 
@@ -10,11 +9,6 @@ import duckdb
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from search_engine_spark.functions.codec import (
-    decode_block,
-    decode_block_np,
-    encode_block,
-)
 from search_engine_spark.functions.hashing import (
     md5_int_py,
     md5_int_sql,
@@ -22,66 +16,6 @@ from search_engine_spark.functions.hashing import (
     md5_two_hash_py,
     md5_two_hash_sql,
 )
-from search_engine_spark.operators.merge import _shift_block_bytes
-
-postings = st.lists(
-    st.tuples(
-        st.integers(min_value=1, max_value=200),  # docid gap
-        st.integers(min_value=1, max_value=500),  # tf
-        st.integers(min_value=0, max_value=4000),  # dl
-        st.lists(
-            st.integers(min_value=1, max_value=50), max_size=6
-        ),  # position gaps
-    ),
-    max_size=40,
-)
-
-
-def _materialize(rows):
-    docids, tfs, dls, positions = [], [], [], []
-    d = 0
-    for gap, tf, dl, pgaps in rows:
-        d += gap
-        docids.append(d)
-        tfs.append(tf)
-        dls.append(dl)
-        p, plist = 0, []
-        for g in pgaps:
-            p += g
-            plist.append(p)
-        positions.append(plist)
-    return docids, tfs, dls, positions
-
-
-@settings(max_examples=150, deadline=None)
-@given(postings)
-def test_block_roundtrip(rows):
-    docids, tfs, dls, positions = _materialize(rows)
-    blob = encode_block(docids, tfs, positions, dls)
-    assert decode_block(blob) == (docids, tfs, dls, positions)
-
-
-@settings(max_examples=150, deadline=None)
-@given(postings, st.integers(min_value=0, max_value=10**9))
-def test_shift_splice_equals_decode_shift(rows, shift):
-    """merge's first-docid varint splice ≡ decode → shift every docid →
-    re-encode (the invariant the block-level index merge rests on)."""
-    docids, tfs, dls, positions = _materialize(rows)
-    blob = encode_block(docids, tfs, positions, dls)
-    spliced = _shift_block_bytes(blob, shift)
-    want = encode_block([d + shift for d in docids], tfs, positions, dls)
-    assert spliced == want
-    assert decode_block(spliced)[0] == [d + shift for d in docids]
-
-
-@settings(max_examples=100, deadline=None)
-@given(postings)
-def test_vectorized_decode_matches_scalar(rows):
-    docids, tfs, dls, positions = _materialize(rows)
-    blob = encode_block(docids, tfs, positions, dls)
-    d2, t2, l2 = decode_block_np(blob)
-    assert list(d2) == docids and list(t2) == tfs and list(l2) == dls
-
 
 key_strings = st.text(
     alphabet=st.characters(

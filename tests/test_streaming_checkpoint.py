@@ -186,6 +186,29 @@ def test_resumable_build_drops_stale_chunks(spark, tmp_path):
         assert Q.topk_wand(a, q, k=20) == Q.topk_wand(b, q, k=20)
 
 
+def test_resumable_build_rejects_duplicate_docids(spark, tmp_path,
+                                                  monkeypatch):
+    """A duplicated docid (what a snapshot file split across tasks
+    produces) must stop the chunked build with the global docid check's
+    error, before any chunk commits."""
+    import search_engine_spark.plans.checkpoint as CP
+
+    real = CP.assign_docids
+
+    def dup_first_two(pages, **kw):
+        docs = real(pages, **kw)
+        return docs.withColumn(
+            "docid", F.when(F.col("docid") == 1, 0).otherwise(F.col("docid"))
+        )
+
+    monkeypatch.setattr(CP, "assign_docids", dup_first_two)
+    pages = gen_pages_df(spark, 40, partitions=2)
+    out = str(tmp_path / "dup")
+    with pytest.raises(RuntimeError, match="docid assignment corrupt"):
+        resumable_build(pages, out, n_chunks=2)
+    assert read_lineage(spark, out).count() == 0
+
+
 # --- log-structured streaming incremental indexing --------------------------
 
 def _deliver(spark, pages, dst, name, mtime):

@@ -177,7 +177,7 @@ def main() -> None:
             f"\nBest-of-{len(runs1)} per size, sizes alternated (A-B-A-B) to decorrelate host\n",
             f"noise; all runs: 1-exec {r1['docs_per_sec_runs']}, 4-exec {r4['docs_per_sec_runs']} docs/s.\n",
             "Pipeline measured from raw html (extraction + tokenize + stats +\n",
-            "block build + layout writes).\n",
+            "postings sort + layout writes).\n",
         ]
         with open(md, "w") as fh:
             fh.writelines(lines)

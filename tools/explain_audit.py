@@ -54,10 +54,11 @@ def main() -> None:
 
     qs = {**E.queries(), **E.extra_queries()}
 
-    # 1. index term lookup: filter pushdown + column pruning
+    # 1. index term lookup: filter pushdown + column pruning (the ranked
+    # path's columns; positions are read only by phrase search)
     idx = E._cached_index(spark, sf_dir)
     lookup = idx.postings.filter(F.col("term").isin(["spark", "join"])).select(
-        "term", "block_max", "block"
+        "term", "docid", "tf", "dl"
     )
     audit(
         "index term lookup (postings scan)",
@@ -65,8 +66,8 @@ def main() -> None:
         [
             ("term IN pushed to parquet scan",
              lambda p: "PushedFilters" in p and "term" in p.split("PushedFilters", 1)[1][:200]),
-            ("column pruning (no docid columns read)",
-             lambda p: "first_docid" not in p.split("ReadSchema", 1)[1][:300]),
+            ("column pruning (positions not read)",
+             lambda p: "positions" not in p.split("ReadSchema", 1)[1][:300]),
         ],
     )
 
